@@ -1,0 +1,7 @@
+import os
+import sys
+
+# the benchmark's modules (run, workloads, eventlog, host) import by name
+BENCH_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if BENCH_DIR not in sys.path:
+    sys.path.insert(0, BENCH_DIR)
