@@ -1,9 +1,9 @@
 """Benchmark of the spark-kg engine, run from outside the engine.
 
-    python3 perfbench/run.py --workload warehouse_serve --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload warehouse_serve --seed 1 --seconds 10 --trace 0
 
 Run it from the root of a checkout. It builds its inputs from ``--seed``,
-drives the engine on ``local[<cores>]`` through its public functions,
+drives the engine on ``local[<nproc - 1>]`` through its public functions,
 checks every output, and prints as its last line one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``. ``--trace 0`` reports the
 end-to-end metrics; ``--trace 1`` runs the workload once untraced and once
@@ -133,11 +133,12 @@ def _start_session(work: str, cores: int, event_log_dir: str | None):
     conf = {
         "spark.local.dir": os.path.join(work, "local"),
         "spark.sql.warehouse.dir": os.path.join(work, "spark-warehouse"),
-        # a heap committed in full at start (-Xms = -Xmx) makes the JVM's
-        # resident high-water mark track the heap cap plus native memory
-        # rather than the GC's run-to-run resizing decisions
+        # a heap committed and touched in full at start (-Xms = -Xmx,
+        # AlwaysPreTouch) makes the JVM's resident high-water mark the heap
+        # cap plus native memory, not how many heap regions the collector
+        # happened to touch (which moved it by ~300 MB from run to run)
         "spark.driver.extraJavaOptions":
-            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
+            f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -XX:+AlwaysPreTouch "
             f"-Xms{os.environ['SPARK_DRIVER_MEM']}",
     }
     if event_log_dir:
@@ -244,7 +245,7 @@ def main(argv=None) -> int:
     os.makedirs(work, exist_ok=True)
     canary_start, load_start = host.spin_canary(), host.loadavg_1m()
     t_start = time.perf_counter()     # set-up starts after the canary
-    cores = host.cpu_count()
+    cores = host.task_slots()
     try:
         _prepare_environment(work)
         # The tracing overhead is the traced construction wall minus the
