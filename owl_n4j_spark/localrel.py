@@ -28,9 +28,9 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     schema (names, types, nullability) is identical to the list path."""
     import pandas as pd
 
-    if isinstance(schema, StructType):
-        names = schema.names
-    else:
-        names = [f.strip().split()[0] for f in str(schema).split(",")]
+    # Names come from the parsed schema: comma-splitting the DDL string
+    # breaks on types with commas (decimal(10,2), map<k,v>, struct<...>).
+    names = (schema if isinstance(schema, StructType)
+             else StructType.fromDDL(schema)).names
     pdf = pd.DataFrame(list(rows), columns=names)
     return spark.createDataFrame(pdf, schema=schema)

@@ -24,10 +24,35 @@ label join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from owl_n4j_spark.functions.keys import key_priority_col
+
+
+def symmetrize(edges: DataFrame) -> DataFrame:
+    """edges(src, dst) -> distinct undirected adjacency (a, b), both
+    directions, self-loops dropped. One explode of both orientations per
+    edge, so the edge plan is scanned once (a union of two projections
+    would run it once per leg)."""
+    return (
+        edges.select(F.explode(F.array(
+            F.struct(F.col("src").alias("a"), F.col("dst").alias("b")),
+            F.struct(F.col("dst").alias("a"), F.col("src").alias("b"))))
+            .alias("e"))
+        .select("e.a", "e.b")
+        .filter(F.col("a") != F.col("b"))
+        .dropDuplicates(["a", "b"])
+    )
+
+
+def _checkpoint_count(df: DataFrame, counted) -> tuple[DataFrame, int]:
+    """Eagerly checkpoint ``df`` and return it with the number of rows
+    where ``counted`` holds, observed on the checkpoint's own job."""
+    obs = Observation()
+    df = df.observe(obs, F.count(F.when(counted, 1)).alias("n")) \
+        .localCheckpoint(eager=True)
+    return df, int(obs.get["n"])
 
 
 def connected_components(
@@ -47,20 +72,13 @@ def connected_components(
     election over incidental aliases (e.g. "emerald-imports-ltd" beats the
     short form "emerald-imports").
     """
-    sym = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-        .localCheckpoint(eager=True)
-    )
+    sym, n_sym = _checkpoint_count(symmetrize(edges), F.lit(True))
     # Empty edge set (common: a corpus whose extraction emitted no SAME_AS
     # evidence) — every vertex is its own component and the label machinery
-    # (labels0 checkpoint + one no-op round + poll, 3 scheduled jobs) would
-    # compute nothing. The emptiness probe is a first-partition scan on the
-    # just-checkpointed frame, so the short-circuit is cheaper than the
-    # round it skips at ANY scale.
-    if sym.isEmpty():
+    # (labels0 checkpoint + one no-op round, 2 scheduled jobs) would
+    # compute nothing. The row count is observed on the checkpoint's own
+    # job, so the short-circuit costs no job at all.
+    if n_sym == 0:
         return sym.select(F.col("a").alias("member_key"),
                           F.col("b").alias("canonical_key"))
     verts = sym.select(F.col("a").alias("v")).dropDuplicates(["v"])
@@ -98,14 +116,11 @@ def connected_components(
                                                            F.col("comp"))).alias("comp"),
                     (F.col("nbr_comp") < F.col("comp")).alias("changed"))
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
+        # Convergence: the changed-label count is observed on the round's
+        # own checkpoint job — no separate poll job per round.
+        new_labels, n_changed = _checkpoint_count(new_labels, F.col("changed"))
         labels = new_labels.drop("changed")
-        # Convergence poll every round: on the just-checkpointed frame the
-        # poll is a first-partition metadata scan (~tens of ms), while one
-        # skipped-poll no-op round costs a full join+agg+checkpoint — the
-        # every-other-round economy was tuned for the pre-AQE shape where
-        # the poll launched a 32-task job.
-        if new_labels.filter(F.col("changed")).limit(1).isEmpty():
+        if n_changed == 0:
             break
 
     return labels.select(

@@ -297,8 +297,9 @@ def extract_records(transcripts: DataFrame,
     Output kinds: ``mention`` (entity occurrences), ``triple`` (candidate
     relationships with RAW keys), ``sameas`` (identity signals feeding
     canonicalization). Plus per-conversation ``Communication`` thread
-    mentions and first-appearance PARTICIPATED_IN triples derived
-    relationally below (not in Python).
+    mentions derived relationally by ``add_thread_mentions`` (not in
+    Python). The Python extractor runs once per turn per action:
+    ``add_thread_mentions`` reads its output through one checkpoint.
     """
     recs = extract_records_stateless(transcripts, gazetteer)
     return add_thread_mentions(recs)
@@ -311,7 +312,15 @@ def add_thread_mentions(recs: DataFrame) -> DataFrame:
     incremental path (streamed records + this tail == batch extract_records;
     tested). PARTICIPATED_IN is derived in the pipeline AFTER linking
     (first appearance is defined on the canonical identity, not the raw
-    role surface)."""
+    role surface).
+
+    ``recs`` feeds both the pass-through leg and the thread aggregation of
+    the union below. A plain union would run the whole record plan — the
+    Python extractor included — once per leg, so ``recs`` is read through a
+    lazy localCheckpoint: it materializes on the first action (inside the
+    stage's own job, no extra barrier) and both legs scan the stored
+    rows, so the extractor runs once per pass."""
+    recs = recs.localCheckpoint(eager=False)
     sent = recs.filter((F.col("kind") == "triple") & (F.col("pred") == "SENT_MESSAGE"))
     threads = (
         sent.groupBy("conv_id", "obj_key")

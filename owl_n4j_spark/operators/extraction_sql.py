@@ -27,10 +27,10 @@ from owl_n4j_spark.operators.extraction import (
     CITY,
     DATE,
     EMAIL,
-    EXTRACTION_SCHEMA,
     NAME,
     ORG,
     PHONE,
+    add_thread_mentions,
 )
 
 # ---------------------------------------------------------------------------
@@ -330,24 +330,4 @@ def extract_records_sql(transcripts: DataFrame,
     for leg in legs[1:]:
         recs = recs.unionByName(leg)
     recs = recs.withColumn("turn_idx", F.col("turn_idx").cast("int"))
-
-    # thread (Communication) mentions — identical relational tail to the
-    # pandas path
-    sent = recs.filter((F.col("kind") == "triple")
-                       & (F.col("pred") == "SENT_MESSAGE"))
-    threads = (
-        sent.groupBy("conv_id", "obj_key")
-        .agg(F.min("turn_idx").alias("turn_idx"), F.min("ts").alias("ts"))
-        .select(
-            "conv_id", "turn_idx", F.lit("mention").alias("kind"),
-            F.col("obj_key").alias("surface"),
-            F.col("obj_key").alias("mention_key"),
-            F.lit("Communication").alias("mention_type"),
-            F.lit(None).cast("string").alias("subj_key"),
-            F.lit(None).cast("string").alias("pred"),
-            F.lit(None).cast("string").alias("obj_key"),
-            F.lit(None).cast("string").alias("amount"),
-            F.lit(None).cast("string").alias("date"), "ts",
-        )
-    )
-    return recs.select(*_COLS).unionByName(threads)
+    return add_thread_mentions(recs.select(*_COLS))

@@ -246,6 +246,8 @@ def extract_records_stateless_vec(transcripts: DataFrame,
 def extract_records_vec(transcripts: DataFrame,
                         gazetteer: list[str] | None = None) -> DataFrame:
     """Vectorized analog of extraction.extract_records (same output
-    contract incl. the relational thread-mention tail)."""
+    contract incl. the relational thread-mention tail). The Arrow extractor
+    runs once per turn per action: the tail reads its output through one
+    checkpoint (``add_thread_mentions``)."""
     return add_thread_mentions(extract_records_stateless_vec(transcripts,
                                                              gazetteer))

@@ -25,16 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from owl_n4j_spark.localrel import local_df
-
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .unionByName(edges.select(F.col("dst").alias("a"),
-                                  F.col("src").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+from owl_n4j_spark.operators.canonicalize import symmetrize
 
 
 def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
@@ -44,7 +35,7 @@ def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
     every vertex adopts the most frequent label among its neighbours,
     ties to the smallest label.
     """
-    sym = _symmetrize(edges).localCheckpoint(eager=True)
+    sym = symmetrize(edges).localCheckpoint(eager=True)
     labels = (sym.select(F.col("a").alias("v")).dropDuplicates()
               .withColumn("lbl", F.col("v")))
     for _ in range(max_iter):
@@ -91,7 +82,7 @@ def louvain_communities(edges: DataFrame, resolution: tuple[int, int] = (1, 1),
     election — all map-side combinable; rounds are fixed so output is
     deterministic regardless of convergence."""
     rn, rd = resolution
-    sym = _symmetrize(edges).localCheckpoint(eager=True)
+    sym = symmetrize(edges).localCheckpoint(eager=True)
     deg = (sym.groupBy(F.col("a").alias("v"))
            .agg(F.count("*").alias("k")).localCheckpoint(eager=True))
     two_m = sym.count()
@@ -146,7 +137,7 @@ def betweenness_sampled(edges: DataFrame, sources: list,
     delta[v] = Σ_w sigma_v/sigma_w · (1 + delta[w]) over successors w.
     Endpoints excluded, undirected halving applied.
     """
-    sym = _symmetrize(edges).localCheckpoint(eager=True)
+    sym = symmetrize(edges).localCheckpoint(eager=True)
     spark = edges.sparkSession
     is_str = dict(edges.dtypes).get("src") == "string"
     vtype = "string" if is_str else "long"

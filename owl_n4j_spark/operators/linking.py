@@ -76,7 +76,9 @@ def build_key_mapping(
 ) -> DataFrame:
     """Resolve distinct raw keys against the alias dictionary.
 
-    mention_keys: DataFrame(raw_key string, mention_type string) — distinct.
+    mention_keys: DataFrame(raw_key string, mention_type string); a key may
+                  repeat (typed mention and untyped SAME_AS endpoint) — it
+                  keeps its greatest non-null type, so typed beats untyped.
     alias_dict:   DataFrame(alias, canonical_key, entity_type) or None.
     rejected_pairs: DataFrame(key_a, key_b) — pairs a human rejected.
     fuzzy_strategy: 'block' (first-token equi-blocking, broadcast dict) or
@@ -84,40 +86,39 @@ def build_key_mapping(
                     scale path when the dictionary outgrows broadcast or
                     token blocks skew).
 
-    Returns DataFrame(raw_key, canonical_key, method) where method in
-    ('exact','fuzzy','self').
+    Returns DataFrame(raw_key, canonical_key, method) with exactly one row
+    per distinct raw_key, method in ('exact','fuzzy','self').
     """
-    mention_keys = mention_keys.dropDuplicates(["raw_key"])
+    keys = mention_keys.groupBy("raw_key").agg(
+        F.max("mention_type").alias("mention_type"))
     if alias_dict is None:
-        return mention_keys.select(
+        return keys.select(
             "raw_key", F.col("raw_key").alias("canonical_key"),
             F.lit("self").alias("method"))
 
     aliases = alias_dict.select(
         F.col("alias"), F.col("canonical_key"), F.col("entity_type"))
 
-    # (a) exact — broadcast: the dictionary is the small side by design
-    exact = (
-        mention_keys.join(F.broadcast(aliases),
-                          mention_keys["raw_key"] == aliases["alias"], "left")
-        .select("raw_key", "mention_type",
-                F.col("canonical_key").alias("exact_canonical"))
+    # (a) exact — broadcast: the dictionary is the small side by design.
+    # The key table feeds the fuzzy leg and the final join: a lazy
+    # checkpoint runs the key aggregation and the exact join once.
+    linked = (
+        keys.join(F.broadcast(aliases), keys["raw_key"] == aliases["alias"],
+                  "left")
+        .select("raw_key", "mention_type", F.col("canonical_key").alias("exact"))
+        .localCheckpoint(eager=False)
     )
-    resolved = exact.filter(F.col("exact_canonical").isNotNull()).select(
-        "raw_key", F.col("exact_canonical").alias("canonical_key"),
-        F.lit("exact").alias("method"))
-    unresolved = exact.filter(F.col("exact_canonical").isNull()) \
-                      .select("raw_key", "mention_type")
 
     # (b) fuzzy — blocked candidate join + levenshtein-ratio disambiguation.
     # Only name-shaped keys participate (phone-/email-/app keys are exact
     # identities; fuzzy-matching them would create false merges).
-    fuzzy_src = unresolved.filter(
-        ~F.col("raw_key").startswith("phone-")
+    fuzzy_src = linked.filter(
+        F.col("exact").isNull()
+        & ~F.col("raw_key").startswith("phone-")
         & ~F.col("raw_key").startswith("email-")
         & ~F.col("raw_key").startswith("chat-")
         & F.col("raw_key").contains("-")
-    )
+    ).select("raw_key", "mention_type")
     cand = aliases.filter(~F.col("alias").startswith("phone-")
                           & ~F.col("alias").startswith("email-"))
 
@@ -159,25 +160,22 @@ def build_key_mapping(
 
     # top-1 per mention by (score desc, key asc) as an ALGEBRAIC argmax:
     # min(struct(-score, key)) is map-side combinable, so the election
-    # partially aggregates before the shuffle — the row_number window it
-    # replaces sorted every candidate group per partition and shipped all
-    # of them (guide §2.3: aggregate before you shuffle). Identical
-    # winner: negated-double ordering == desc, struct tie-break == key asc.
+    # partially aggregates before the shuffle (guide §2.3).
     fuzzy = (
         pairs.groupBy("raw_key")
         .agg(F.min(F.struct((-F.col("score")).alias("ns"),
                             F.col("canonical_key").alias("k"))).alias("e"))
-        .select("raw_key", F.col("e.k").alias("canonical_key"),
-                F.lit("fuzzy").alias("method"))
+        .select("raw_key", F.col("e.k").alias("fuzzy"))
     )
 
-    # (c) everything else maps to itself (new entity)
-    selfmap = (
-        unresolved.join(fuzzy.select("raw_key"), "raw_key", "left_anti")
-        .select("raw_key", F.col("raw_key").alias("canonical_key"),
-                F.lit("self").alias("method"))
-    )
-    return resolved.unionByName(fuzzy).unionByName(selfmap)
+    # (c) one left join of the winners back onto the key table: exact, else
+    # fuzzy, else the key maps to itself (new entity)
+    return linked.join(fuzzy, "raw_key", "left").select(
+        "raw_key",
+        F.coalesce("exact", "fuzzy", "raw_key").alias("canonical_key"),
+        F.when(F.col("exact").isNotNull(), "exact")
+         .when(F.col("fuzzy").isNotNull(), "fuzzy")
+         .otherwise("self").alias("method"))
 
 
 def remap_keys(df: DataFrame, mapping: DataFrame, cols: list[str]) -> DataFrame:

@@ -116,6 +116,18 @@ def normalize_transcripts(transcripts: DataFrame) -> DataFrame:
     )
 
 
+def _session_thread_target(spark: SparkSession):
+    """Decorator that carries the session's local properties and tags into
+    a pool thread. ``inheritable_thread_target(session)`` returns such a
+    decorator only in pinned-thread mode; in the legacy mode
+    (PYSPARK_PIN_THREAD=false) it returns the session itself, and the
+    function is then submitted as it is."""
+    from pyspark import inheritable_thread_target
+
+    wrap = inheritable_thread_target(spark)
+    return wrap if callable(wrap) else (lambda f: f)
+
+
 class PipelineResult(dict):
     """Dict of stage DataFrames: transcripts, records, mapping, triples,
     mentions, nodes, edges, manifest."""
@@ -141,7 +153,10 @@ def run_pipeline(
     expressions inside whole-stage codegen, 50k — the zero-Python option).
     All three are record-for-record equal (tested); the workload is
     regex-bound, not serialization-bound, which is why the all-JVM variant
-    trails the Arrow engines.
+    trails the Arrow engines. Whichever engine runs, it runs once per
+    pass, in the batch and the warehouse path alike: the thread-mention
+    tail reads the extractor's output through one checkpoint
+    (``add_thread_mentions``; pinned by tests/test_plan_hygiene.py).
 
     ``records_df``: pre-extracted records (e.g. accumulated by the
     Structured-Streaming incremental extractor plus the relational
@@ -323,7 +338,6 @@ def run_pipeline(
                                            F.lit(None).cast("string")
                                            .alias("mention_type")))
             .filter(F.col("raw_key").isNotNull())
-            .dropDuplicates(["raw_key"])
         )
         # checkpoint: the mapping is small (distinct raw keys) but its plan
         # scans all records + the fuzzy join; canonical_mapping consumes it
@@ -381,8 +395,7 @@ def run_pipeline(
     if warehouse is not None:
         from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
-        wrap = inheritable_thread_target(spark)  # session-aware (Spark 4)
+        wrap = _session_thread_target(spark)
         chain_a, chain_b = {"ok": resume}, {"ok": resume}
         with ThreadPoolExecutor(max_workers=2) as pool:
             fut_a = pool.submit(wrap(

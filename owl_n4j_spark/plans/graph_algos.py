@@ -299,7 +299,7 @@ SQL_PAGERANK = _pagerank_sql()
 
 def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components (SURVEY G6) — REUSES the canonicalization
-    engine's salted hash-min CC (operators/canonicalize.py) on the
+    engine's hash-min CC (operators/canonicalize.py) on the
     co-presence graph; the oracle is an exact recursive-CTE reachability
     closure. Vertex ids are zero-padded so string-min == numeric-min."""
     e = copresence_edges(spark, sf_dir)

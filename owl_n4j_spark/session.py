@@ -75,7 +75,8 @@ def get_spark(
         .master(master)
         # AQE: runtime coalescing of small shuffle partitions and skew-join
         # splitting — the hub-entity skew (BASELINE.md "70k+ relationships")
-        # is handled here plus explicit salting in canonicalize.py.
+        # is handled here plus map-side partial aggregation of the
+        # algebraic neighbour-min in canonicalize.py.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -53,7 +53,8 @@ def test_aqe_skew_join_splits(spark):
     """AQE skew handling (SURVEY §4 / north rule): a join where 90% of the
     left side carries ONE key must still complete with correct results, and
     AQE must mark the sort-merge join skew-aware. This is the query-level
-    complement to the explicit salting inside connected_components."""
+    complement to the map-side partial aggregation inside
+    connected_components."""
     from pyspark.sql import functions as F
 
     n = 400_000

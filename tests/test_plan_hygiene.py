@@ -3,6 +3,8 @@ be visible in the actual plans — filters reach the scan, projections prune
 the read schema, dimension joins broadcast, and the blocked geo join never
 degenerates into a nested-loop/cartesian product."""
 
+import pytest
+
 from owl_n4j_spark.plans.geo import q_geo_copresence, q_tower_coreg
 from owl_n4j_spark.plans.relational import q_pricing_summary, q_region_revenue
 from owl_n4j_spark.plans.text import q_doc_token_stats, q_knn_bruteforce
@@ -206,3 +208,83 @@ def test_no_global_window_over_unbounded_input_in_serving_queries(spark):
               q_top_parts):
         bad = _global_windows_over_unbounded(q(spark, SF))
         assert not bad, f"{q.__name__}: global window over unbounded input: {bad}"
+
+
+# ---------------------------------------------------------------------------
+# Compute-once construction pass: the extractor, the linking key table and
+# the same-as edge plan each run once per pass. A pass-through mapInPandas
+# "tap" counts the rows that flow out of the subplan under test; a subplan
+# that two consumers re-execute shows every row twice or more.
+# ---------------------------------------------------------------------------
+
+
+def _tap(df, acc):
+    def run(batches):
+        for pdf in batches:
+            acc.add(len(pdf))
+            yield pdf
+    return df.mapInPandas(run, schema=df.schema)
+
+
+def test_pipeline_runs_the_extractor_once(spark, tmp_path, monkeypatch):
+    # the t02 stage's Python extractor, in the batch and the warehouse path
+    from owl_n4j_spark.operators import extraction_vec
+    from owl_n4j_spark.pipeline import normalize_transcripts, run_pipeline
+    from owl_n4j_spark.synth import generate_corpus_pandas
+
+    corpus = generate_corpus_pandas(12, seed=3)
+    tr = spark.createDataFrame(corpus["transcripts"])
+    ad = spark.createDataFrame(corpus["alias_dict"])
+    real = extraction_vec.extract_records_stateless_vec
+    n_rows = real(normalize_transcripts(tr)).count()
+    for wh in (None, str(tmp_path / "wh")):
+        acc = spark.sparkContext.accumulator(0)
+        monkeypatch.setattr(extraction_vec, "extract_records_stateless_vec",
+                            lambda t, g=None: _tap(real(t, g), acc))
+        res = run_pipeline(spark, tr, alias_dict=ad, warehouse=wh,
+                           with_manifest=False)
+        for stage in ("records", "mapping", "triples", "nodes", "edges"):
+            assert res[stage].count() > 0
+        assert acc.value == n_rows, (wh, acc.value, n_rows)
+
+
+@pytest.mark.parametrize("strategy", ["block", "lsh"])
+def test_key_mapping_reads_the_key_table_once(spark, strategy):
+    from owl_n4j_spark.operators.linking import build_key_mapping
+
+    keys = spark.createDataFrame(
+        [("maria-garcha", "Person"), ("maria-garcia", "Person"),
+         ("bob-jones", "Person"), ("phone-555", None)],
+        "raw_key string, mention_type string")
+    aliases = spark.createDataFrame(
+        [("maria-garcia", "phone-111", "Person")],
+        "alias string, canonical_key string, entity_type string")
+    rejected = spark.createDataFrame([("bob-jones", "phone-111")],
+                                     "key_a string, key_b string")
+    acc = spark.sparkContext.accumulator(0)
+    got = build_key_mapping(_tap(keys, acc), aliases, rejected_pairs=rejected,
+                            fuzzy_strategy=strategy)
+    assert {r["method"] for r in got.collect()} == {"exact", "fuzzy", "self"}
+    assert acc.value == 4
+
+
+def test_sameas_symmetrization_scans_the_edge_plan_once(spark):
+    from owl_n4j_spark.operators.canonicalize import (
+        build_sameas_edges, connected_components, symmetrize)
+
+    mapping = spark.createDataFrame(
+        [("a", "A"), ("b", "B"), ("c", "C"), ("d", "D")],
+        "raw_key string, canonical_key string")
+    acc = spark.sparkContext.accumulator(0)
+    sameas = _tap(spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("d", "d")], "subj_key string, obj_key string"),
+        acc)
+    edges = build_sameas_edges(mapping, sameas)
+    plan = _plan(symmetrize(edges))
+    # one scan of the edge plan: one tap, one remap join per endpoint
+    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("BroadcastHashJoin") == 2, plan
+    comps = {r["member_key"]: r["canonical_key"]
+             for r in connected_components(edges).collect()}
+    assert comps == {"A": "A", "B": "A", "C": "A"}
+    assert acc.value == 3
