@@ -16,7 +16,6 @@ directory; on Iceberg it would be the table snapshot id — the resume logic
 from __future__ import annotations
 
 import os
-import time
 import uuid
 from datetime import datetime, timezone
 
@@ -124,13 +123,3 @@ class ManifestWriter:
 
 def stage_is_committed(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-class Timer:
-    def __enter__(self):
-        self.t0 = time.time()
-        self.started_at = datetime.now(timezone.utc)
-        return self
-
-    def __exit__(self, *exc):
-        self.elapsed = time.time() - self.t0

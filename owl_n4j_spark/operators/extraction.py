@@ -9,6 +9,14 @@ shape: one Arrow-batched ``mapInPandas`` pass per transcript partition
 emitting a single long-format record table that downstream stages split into
 ``mentions``, ``candidate triples`` and ``same-as`` signals.
 
+This module holds the extraction contract (grammars, normalizers, output
+schema, the relational thread-mention tail) and the per-turn reference loop
+(``_extract_turn`` / ``extract_records_stateless`` / ``extract_records``).
+The loop is the test oracle only: the one engine that runs, batch and
+streaming alike, is the Arrow extractor in ``extraction_vec.py``
+(``get_extractor``), asserted record-for-record equal to the loop in
+tests/test_extraction_vec.py and tests/test_streaming.py.
+
 All keys minted here are RAW (surface-derived, per the key cascade in
 functions/keys.py); entity linking (stage 4) remaps them to canonical keys.
 """
@@ -128,7 +136,8 @@ def _sameas(conv_id, turn_idx, ts, a, b):
 
 
 def _extract_turn(conv_id, turn_idx, role, text, tool, ts, gazetteer, out):
-    """Extract one turn into `out` (list of record dicts)."""
+    """Extract one turn into `out` (list of record tuples). Test oracle:
+    not used outside tests (the engine is extraction_vec)."""
     chat_key = f"chat-{conv_id}"
     # -- speaker identity from the role column (the deterministic
     #    Cellebrite-path semantics: every message links its sender;
@@ -235,15 +244,16 @@ def _extract_turn(conv_id, turn_idx, role, text, tool, ts, gazetteer, out):
 
 def extract_records_stateless(transcripts: DataFrame,
                               gazetteer: list[str] | None = None) -> DataFrame:
-    """The stateless per-turn half of extraction: one Arrow-batched
-    ``mapInPandas`` pass, no aggregation — safe inside a streaming query
-    (owl_n4j_spark/streaming/incremental.py) as well as batch."""
+    """The stateless per-turn half of extraction as a per-turn Python loop:
+    one Arrow-batched ``mapInPandas`` pass, no aggregation. Test oracle for
+    ``extraction_vec.extract_records_stateless_vec``; not used outside
+    tests."""
     from owl_n4j_spark.synth import CITIES
     gaz = frozenset(gazetteer or CITIES)
 
     def run(batches):
         for pdf in batches:
-            out: list[dict] = []
+            out: list[tuple] = []
             for conv_id, turn_idx, role, text, tool, ts in zip(
                 pdf["conv_id"], pdf["turn_idx"], pdf["role"], pdf["text"],
                 pdf["tool"], pdf["ts"]
@@ -264,35 +274,19 @@ def extract_records_stateless(transcripts: DataFrame,
     return transcripts.mapInPandas(run, schema=EXTRACTION_SCHEMA)
 
 
-DEFAULT_ENGINE = "vec"
-
-
-def get_extractor(name: str = DEFAULT_ENGINE):
-    """Extraction engine selector — all three are record-for-record equal
-    (tested):
-
-    - 'vec'    (default): Arrow-native RE2 extract + columnar record build
-      (extraction_vec.py) — measured 166-181k turns/s at local[8] on 1.06M
-      turns vs 150-155k for 'pandas'.
-    - 'pandas': per-turn compiled-re loop with early exit — the r01 default;
-      still beats 'sql' because the workload is regex-bound.
-    - 'sql':    pure column expressions, whole-stage codegen, zero Python
-      (extraction_sql.py) — 50k turns/s; the zero-Python deployment option.
-    """
-    if name == "vec":
-        from owl_n4j_spark.operators.extraction_vec import extract_records_vec
-        return extract_records_vec
-    if name == "pandas":
-        return extract_records
-    if name == "sql":
-        from owl_n4j_spark.operators.extraction_sql import extract_records_sql
-        return extract_records_sql
-    raise ValueError(f"unknown extraction engine: {name!r}")
+def get_extractor():
+    """The extraction engine: ``extraction_vec.extract_records_vec``
+    (Arrow-native RE2 extract + columnar record build; 166-181k turns/s at
+    local[8] on 1.06M turns vs 150-155k for this module's per-turn loop)."""
+    from owl_n4j_spark.operators.extraction_vec import extract_records_vec
+    return extract_records_vec
 
 
 def extract_records(transcripts: DataFrame,
                     gazetteer: list[str] | None = None) -> DataFrame:
-    """transcripts -> long-format extraction records (Arrow-batched).
+    """transcripts -> long-format extraction records, per-turn loop. Test
+    oracle for ``extraction_vec.extract_records_vec``; not used outside
+    tests.
 
     Output kinds: ``mention`` (entity occurrences), ``triple`` (candidate
     relationships with RAW keys), ``sameas`` (identity signals feeding

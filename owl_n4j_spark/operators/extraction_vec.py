@@ -1,24 +1,25 @@
 """Vectorized extraction engine — Arrow-native regex, columnar record build.
 
-Third engine for stage 2-3 (see operators/extraction.py for the contract and
-the reference citations): instead of a per-turn Python loop over compiled
-``re`` patterns, each Arrow batch is matched against every grammar with
-``pyarrow.compute.extract_regex`` (RE2, C loop, no per-row Python), rows are
-claimed first-match-wins by boolean masks, and records are assembled as
-columnar frames. Python only touches MATCHED group values (amount/date
-normalization, phone cascade) via cached maps — O(matches), not O(turns x
-rules).
+The extraction engine for stage 2-3, batch and streaming alike (see
+operators/extraction.py for the contract and the reference citations):
+instead of a per-turn Python loop over compiled ``re`` patterns, each Arrow
+batch is matched against every grammar with ``pyarrow.compute.extract_regex``
+(RE2, C loop, no per-row Python), rows are claimed first-match-wins by
+boolean masks, and records are assembled as column arrays. Python only
+touches MATCHED group values (amount/date normalization, phone cascade) via
+cached maps — O(matches), not O(turns x rules).
 
-Record-for-record equal to ``extraction.extract_records`` (asserted in
-tests/test_extraction_vec.py on both the events-derived and the fuzz
-corpora); kept as a separate engine so the measured default can be chosen
-per deployment (`run_pipeline(engine="pandas_vec")`).
+Record-for-record equal to the per-turn loop ``extraction.extract_records``,
+kept as the test oracle (asserted in tests/test_extraction_vec.py on both
+the events-derived and the fuzz corpora, and for the streamed records in
+tests/test_streaming.py).
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -80,40 +81,46 @@ def _role_key(role) -> str | None:
     return person_key(role, name=role)
 
 
-def _mk(sub: pd.DataFrame, kind: str, surface=None, mention_key=None,
-        mention_type=None, subj=None, pred=None, obj=None,
-        amount=None, date=None) -> pd.DataFrame:
+# A "leg" is one record shape over a set of turns: its values in _REC_COLS
+# order, each a per-turn array or a scalar broadcast by _assemble. Legs stay
+# plain arrays — one DataFrame per batch, not per leg: pandas' per-frame
+# cost dominated small (streaming-sized) batches.
+def _take(rows: dict[str, np.ndarray], mask: np.ndarray) -> dict[str, np.ndarray]:
+    return {c: a[mask] for c, a in rows.items()}
+
+
+def _mk(sub: dict[str, np.ndarray], kind: str, surface=None,
+        mention_key=None, mention_type=None, subj=None, pred=None, obj=None,
+        amount=None, date=None) -> list:
     def val(x):
         if isinstance(x, pd.Series):
             return x.values
         return x
-    out = pd.DataFrame({
-        "conv_id": sub["conv_id"].values,
-        "turn_idx": sub["turn_idx"].values,
-        "kind": kind,
-        "surface": val(surface),
-        "mention_key": val(mention_key),
-        "mention_type": mention_type,
-        "subj_key": val(subj),
-        "pred": pred,
-        "obj_key": val(obj),
-        "amount": val(amount),
-        "date": val(date),
-        "ts": sub["ts"].values,
-    })
-    return out[_REC_COLS]
+    return [sub["conv_id"], sub["turn_idx"], kind, val(surface),
+            val(mention_key), mention_type, val(subj), pred, val(obj),
+            val(amount), val(date), sub["ts"]]
 
 
-def _emit(rule: str, sub: pd.DataFrame, g: dict[str, pd.Series],
-          gaz: frozenset) -> list[pd.DataFrame]:
-    out: list[pd.DataFrame] = []
+def _assemble(legs: list[list]) -> pd.DataFrame:
+    cols = {}
+    for j, c in enumerate(_REC_COLS):
+        cols[c] = np.concatenate([
+            leg[j] if isinstance(leg[j], np.ndarray)
+            else np.full(len(leg[0]), leg[j], dtype=object)
+            for leg in legs])
+    return pd.DataFrame(cols)
+
+
+def _emit(rule: str, sub: dict[str, np.ndarray], g: dict[str, pd.Series],
+          gaz: frozenset) -> list[list]:
+    out: list[list] = []
     if rule == "intro":
         nk = _nk_series(g["n"])
         pk = g["p"].map(lambda s: person_key(s))
         out.append(_mk(sub, "mention", g["n"], nk, "Person"))
         ok = pk.notna().values
         if ok.any():
-            s2 = sub[ok]
+            s2 = _take(sub, ok)
             out.append(_mk(s2, "mention", g["p"][ok], pk[ok], "Person"))
             out.append(_mk(s2, "sameas", subj=nk[ok], pred="SAME_AS",
                            obj=pk[ok]))
@@ -143,7 +150,7 @@ def _emit(rule: str, sub: pd.DataFrame, g: dict[str, pd.Series],
         out.append(_mk(sub, "triple", subj=ka, pred="MET", obj=kb))
         in_gaz = g["c"].isin(gaz).values
         if in_gaz.any():
-            s2 = sub[in_gaz]
+            s2 = _take(sub, in_gaz)
             ck = _nk_series(g["c"][in_gaz])
             out.append(_mk(s2, "mention", g["c"][in_gaz], ck, "Location"))
             out.append(_mk(s2, "triple", subj=ka[in_gaz], pred="WAS_AT", obj=ck))
@@ -153,7 +160,7 @@ def _emit(rule: str, sub: pd.DataFrame, g: dict[str, pd.Series],
         out.append(_mk(sub, "mention", g["a"], ka, "Person"))
         in_gaz = g["c"].isin(gaz).values
         if in_gaz.any():
-            s2 = sub[in_gaz]
+            s2 = _take(sub, in_gaz)
             ck = _nk_series(g["c"][in_gaz])
             dt = g["d"][in_gaz].map(normalize_date)
             out.append(_mk(s2, "mention", g["c"][in_gaz], ck, "Location",
@@ -201,42 +208,36 @@ def extract_records_stateless_vec(transcripts: DataFrame,
         pa.set_io_thread_count(1)
         empty = pd.DataFrame({c: pd.Series(dtype="object") for c in _REC_COLS})
         for pdf in batches:
-            outs: list[pd.DataFrame] = []
+            legs: list[list] = []
+            rows = {c: pdf[c].values for c in ("conv_id", "turn_idx", "ts")}
             # ---- speaker leg: unique-role cascade map --------------------
             roles = pdf["role"]
             rmap = {r: _role_key(r) for r in roles.unique()}
             spk = roles.map(rmap)
-            has_spk = spk.notna()
+            has_spk = spk.notna().values
             if has_spk.any():
-                sub = pdf[has_spk.values]
-                outs.append(_mk(sub, "mention", roles[has_spk],
+                sub = _take(rows, has_spk)
+                legs.append(_mk(sub, "mention", roles[has_spk],
                                 spk[has_spk], "Person"))
-                outs.append(_mk(sub, "triple", subj=spk[has_spk],
+                legs.append(_mk(sub, "triple", subj=spk[has_spk],
                                 pred="SENT_MESSAGE",
-                                obj="chat-" + sub["conv_id"]))
+                                obj="chat-" + pdf["conv_id"][has_spk]))
             # ---- grammar legs: RE2 extract + first-match-wins masks ------
             text = pdf["text"].map(lambda x: x if isinstance(x, str) else None)
             arr = pa.array(text.tolist(), type=pa.string())
-            unclaimed = text.notna() & (text != "")
+            unclaimed = (text.notna() & (text != "")).values
             for rule, pat in _VEC_RULES:
-                if not unclaimed.values.any():
+                if not unclaimed.any():
                     break
                 st = pc.extract_regex(arr, pat)
-                matched = pd.Series(pc.is_valid(st).to_numpy(
-                    zero_copy_only=False), index=pdf.index)
-                take = matched & unclaimed
-                if take.values.any():
-                    tv = take.values
-                    g = {f.name: pd.Series(
-                            st.field(f.name).to_pandas().values,
-                            index=pdf.index)[tv]
+                take = pc.is_valid(st).to_numpy(zero_copy_only=False) & unclaimed
+                if take.any():
+                    g = {f.name: pd.Series(st.field(f.name).to_numpy(
+                            zero_copy_only=False)[take], dtype=object)
                          for f in st.type}
-                    outs.extend(_emit(rule, pdf[tv], g, gaz))
+                    legs.extend(_emit(rule, _take(rows, take), g, gaz))
                 unclaimed &= ~take
-            if outs:
-                o = pd.concat(outs, ignore_index=True)
-            else:
-                o = empty.copy()
+            o = _assemble(legs) if legs else empty.copy()
             o["turn_idx"] = o["turn_idx"].astype("int32")
             yield o
 

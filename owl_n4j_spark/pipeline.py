@@ -144,18 +144,11 @@ def run_pipeline(
     resume: bool = True,
     with_manifest: bool = True,
     gazetteer: list[str] | None = None,
-    engine: str = "vec",
     records_df: DataFrame | None = None,
 ) -> PipelineResult:
-    """``engine``: see operators/extraction.get_extractor — 'vec' (default,
-    Arrow-native RE2 extract, measured 166-181k turns/s at local[8]),
-    'pandas' (per-turn compiled-re loop, 150-155k), 'sql' (pure column
-    expressions inside whole-stage codegen, 50k — the zero-Python option).
-    All three are record-for-record equal (tested); the workload is
-    regex-bound, not serialization-bound, which is why the all-JVM variant
-    trails the Arrow engines. Whichever engine runs, it runs once per
-    pass, in the batch and the warehouse path alike: the thread-mention
-    tail reads the extractor's output through one checkpoint
+    """Extraction runs the Arrow extractor (operators/extraction.get_extractor)
+    once per pass, in the batch and the warehouse path alike: the
+    thread-mention tail reads the extractor's output through one checkpoint
     (``add_thread_mentions``; pinned by tests/test_plan_hygiene.py).
 
     ``records_df``: pre-extracted records (e.g. accumulated by the
@@ -314,7 +307,7 @@ def run_pipeline(
     if records_df is not None:
         records = staged("t02_records", lambda: records_df)
     else:
-        extract_fn = get_extractor(engine)
+        extract_fn = get_extractor()
         # NOTE (r6 measurement): repartitioning `clean` to 2x cores before
         # the Python stage speeds extraction itself ~1.7x (the AQE-coalesced
         # normalize output is a handful of partitions), but the wider

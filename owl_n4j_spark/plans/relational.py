@@ -406,12 +406,15 @@ def q_event_dedup(spark, sf_dir):
     per distinct (type, minute) within a user, so the survivor COUNT is
     a countDistinct — one hash aggregation with map-side partials,
     replacing a sort-every-partition row_number window that shipped every
-    event row through the shuffle (guide §2.3)."""
+    event row through the shuffle (guide §2.3). The key is counted as ONE
+    struct: a struct is never NULL, so a NULL type or minute is its own
+    key, as in the oracle's PARTITION BY, where countDistinct over two
+    columns would drop the row."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
-        .agg(F.countDistinct(
-            "event_type", F.date_format("ts", "yyyy-MM-dd HH:mm"))
+        .agg(F.countDistinct(F.struct(
+            "event_type", F.date_format("ts", "yyyy-MM-dd HH:mm")))
             .alias("n_dedup"))
         .orderBy("user_id")
     )

@@ -105,12 +105,15 @@ def rtf_to_text(s: str) -> str:
                     # consuming a structural brace or a control word would
                     # desync depth/uc_stack and extend a destination skip
                     # over visible text — so stop at any unescaped brace or
-                    # at a '\' that is not a \'xx quote escape.
+                    # control word. An escaped literal (\{ \} \\) is one
+                    # fallback char, like a \'xx escape.
                     for _ in range(uc_stack[-1]):
                         if i >= n or s[i] in "{}":
                             break
                         if s.startswith("\\'", i):
                             i += 4
+                        elif s[i:i + 2] in ("\\{", "\\}", "\\\\"):
+                            i += 2
                         elif s[i] == "\\":
                             break
                         else:

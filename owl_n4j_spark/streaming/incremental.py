@@ -5,13 +5,16 @@ batched background ingestion with MERGE idempotency
 (/root/reference/ingestion/scripts/cellebrite/ingestion.py:219-241,496-522;
 re-ingest MERGE semantics /root/reference/ingestion/scripts/cellebrite/
 neo4j_writer.py:1123-1134). This module is the Spark-native upgrade: new
-transcript files land in a directory, `readStream` picks them up, the SAME
-extraction operator (stage 2/3 is stateless per-turn, so it runs unchanged
-inside a streaming query) emits records, and `foreachBatch` appends
-mention/triple parquet partitions keyed by deterministic values — re-running
-a batch overwrites to the same content, preserving the MERGE idempotency
-contract. The `availableNow` trigger gives catch-up-then-stop semantics
-(the reference's "resume background task"); checkpointLocation carries the
+transcript files land in a directory, `readStream` picks them up, the
+stateless half of the batch engine's Arrow extractor
+(``extraction_vec.extract_records_stateless_vec``: stage 2/3 is stateless
+per-turn, so it runs unchanged inside a streaming query) emits records, and
+the parquet sink appends them partitioned by ``kind`` — re-running a batch
+overwrites to the same content, preserving the MERGE idempotency contract.
+The relational thread-mention tail is an aggregation and stays in the
+downstream batch job (or a watermarked stream — thread_stats_stream).
+The `availableNow` trigger gives catch-up-then-stop semantics (the
+reference's "resume background task"); checkpointLocation carries the
 source offsets so a restart never re-processes committed files.
 
 Watermarked per-conversation windowed aggregation (`thread_stats_stream`)
@@ -24,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from owl_n4j_spark.operators.extraction import extract_records_stateless
+from owl_n4j_spark.operators.extraction_vec import extract_records_stateless_vec
 from owl_n4j_spark.synth import TRANSCRIPT_SCHEMA
 
 
@@ -221,15 +224,6 @@ def run_incremental_wiretap_ingest(
     q.awaitTermination()
 
 
-def extract_stream(transcripts: DataFrame,
-                   gazetteer: list[str] | None = None) -> DataFrame:
-    """Stateless stage 2/3 over a streaming DataFrame — identical operator,
-    identical output schema as the batch path (tested equal). The relational
-    thread-mention/PARTICIPATED_IN legs are aggregations and stay in the
-    downstream batch job (or a watermarked stream — thread_stats_stream)."""
-    return extract_records_stateless(transcripts, gazetteer)
-
-
 def run_incremental_extraction(
     spark: SparkSession,
     input_dir: str,
@@ -243,8 +237,8 @@ def run_incremental_extraction(
     restart-safe via ``checkpoint_dir`` (committed source files are never
     re-read — the Iceberg-snapshot analog of the reference's resume logic).
     """
-    records = extract_stream(read_transcript_stream(spark, input_dir),
-                             gazetteer)
+    records = extract_records_stateless_vec(
+        read_transcript_stream(spark, input_dir), gazetteer)
     q = (
         records.writeStream
         .format("parquet")

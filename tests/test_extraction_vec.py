@@ -1,6 +1,6 @@
 """The vectorized (Arrow-regex) extraction engine must be record-for-record
-equal to the loop engine on both corpora — same discipline as
-tests/test_extraction_sql.py for the all-JVM engine."""
+equal to the per-turn loop oracle (operators/extraction.extract_records) on
+both corpora: the synthetic fuzz corpus and the events-derived one."""
 
 from datetime import datetime
 

@@ -345,8 +345,8 @@ def test_no_synopsis_batch_stream_parity(spark, tmp_path):
 
 def test_rtf_uc_scoping_and_rich_fixture_parity():
     """\\ucN is honored and group-scoped (RTF formatting-state semantics):
-    \\uc2 skips two fallback chars (bare or \\'xx escapes), a nested \\uc1
-    override dies with its group, \\uc0 skips none — and the rich
+    \\uc2 skips two fallback chars (bare, \\'xx or \\{ \\} \\\\ escapes), a
+    nested \\uc1 override dies with its group, \\uc0 skips none — and the rich
     Word-authored fixture shape strips to the IDENTICAL text as the plain
     shape, so the exact q_wiretap_ingest oracle covers it."""
     from owl_n4j_spark.sources.wiretap import _render_rtf
@@ -356,6 +356,10 @@ def test_rtf_uc_scoping_and_rich_fixture_parity():
     assert rtf_to_text(r"{\rtf1\ansi\uc0 \u8364 X}") == "€X"
     # fallbacks may themselves be \'xx escapes — one skip each
     assert rtf_to_text("{\\rtf1\\ansi\\uc2 \\u233\\'e9\\'e9tail}") == "étail"
+    # ... or escaped literals \{ \} \\ — one skip each, nothing leaks
+    assert rtf_to_text(r"{\rtf1\ansi\uc1\u233\{x}") == "éx"
+    assert rtf_to_text(r"{\rtf1\ansi\uc1\u233\\x}") == "éx"
+    assert rtf_to_text(r"{\rtf1\ansi\uc2\u233\}\'e9x}") == "éx"
 
     for with_syn in (True, False):
         plain = parse_rtf(_render_rtf("Alice Smith", "Bob O'Neil",
