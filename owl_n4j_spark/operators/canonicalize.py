@@ -65,7 +65,8 @@ def connected_components(
     Hash-min label propagation with priority-prefixed labels, map-side
     partial aggregation, and lineage truncation via localCheckpoint.
     Converges in O(diameter) rounds; alias graphs are near-star-shaped
-    (diameter <= ~4), so this is a handful of cheap shuffles.
+    (diameter <= ~4), so this is a handful of cheap shuffles. Raises
+    RuntimeError if labels still change after ``max_iter`` rounds.
 
     ``canon_keys`` (single column ``key``): keys that are dictionary
     canonicals — within the same cascade-priority class they win the
@@ -122,6 +123,10 @@ def connected_components(
         labels = new_labels.drop("changed")
         if n_changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds: "
+            f"{n_changed} labels still changing")
 
     return labels.select(
         F.col("v").alias("member_key"),

@@ -22,27 +22,22 @@ from owl_n4j_spark.operators.graph_analytics import (
     label_propagation,
     louvain_communities,
 )
-from owl_n4j_spark.plans.kg_analytics import _cache_key, warehouse_dir
+from owl_n4j_spark.plans.kg_analytics import shared_table
 from owl_n4j_spark.plans.relational import load
 
 EDGE_MIN_HOURS = 10
 PR_ITERS = 10
 PR_DAMPING = 0.85
 
-_EDGE_CACHE: dict[tuple, DataFrame] = {}
-
 
 def copresence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected unique edges (a < b): user pairs sharing >= EDGE_MIN_HOURS
     hour buckets. Bucket equi-join bounds the pair blowup (J7).
 
-    MATERIALIZED ONCE per (session, sf_dir) to a parquet warehouse and read
-    back — all eight graph queries consume this table, and recomputing the
-    distinct + minute-bucket self-join + groupBy per query was ~4 s × 8 of
-    redundant work at sf0.1 (the serving-layer rule: derive shared subplans
-    once; same pattern as the kg_result warehouse)."""
-    key = _cache_key(spark, sf_dir)
-    if key not in _EDGE_CACHE:
+    A parquet ``shared_table`` — all eight graph queries consume this
+    table, and recomputing the distinct + minute-bucket self-join + groupBy
+    per query was ~4 s × 8 of redundant work at sf0.1."""
+    def build() -> DataFrame:
         ev = load(spark, sf_dir, "events")
         # hour bucket as an int64 epoch-hour, not a formatted string: the
         # bucket is bijective with date_format('yyyy-MM-dd HH') under the
@@ -65,7 +60,7 @@ def copresence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
              .repartition(spark.sparkContext.defaultParallelism * 2, "h")
              .dropDuplicates(["h", "user_id"]))
         y = m.select(F.col("h"), F.col("user_id").alias("user_b"))
-        edges = (
+        return (
             m.join(y, on="h")
             .filter(F.col("user_id") < F.col("user_b"))
             .groupBy(F.col("user_id").alias("a"), F.col("user_b").alias("b"))
@@ -73,10 +68,7 @@ def copresence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n_hours") >= EDGE_MIN_HOURS)
             .select("a", "b")
         )
-        path = warehouse_dir(spark, sf_dir, "copresence_edges")
-        edges.write.mode("overwrite").parquet(path)
-        _EDGE_CACHE[key] = spark.read.parquet(path)
-    return _EDGE_CACHE[key]
+    return shared_table(spark, sf_dir, "copresence_edges", build)
 
 
 _DUCK_EDGES_CTE = f"""
@@ -457,23 +449,20 @@ ORDER BY src, dst
 
 LPA_ITERS = 4
 
-_LPA_CACHE: dict[tuple, DataFrame] = {}
-
 
 def _lpa_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vertex, community) after LPA_ITERS rounds over the co-presence
     graph — computed once per (session, sf): both q_lpa_communities and
     q_community_supergraph consume exactly this membership, and the
-    LPA_ITERS iterative joins were run twice (same shared-subplan rule as
-    copresence_edges; checkpoint leaf, not a warehouse — the frame is
-    O(V))."""
-    key = _cache_key(spark, sf_dir)
-    if key not in _LPA_CACHE:
+    LPA_ITERS iterative joins were run twice. A ``shared_table`` kept as
+    an eager checkpoint, not a warehouse — the frame is O(V)."""
+    def build() -> DataFrame:
         e = copresence_edges(spark, sf_dir).select(
             F.col("a").alias("src"), F.col("b").alias("dst"))
-        _LPA_CACHE[key] = label_propagation(
+        return label_propagation(
             e, max_iter=LPA_ITERS).localCheckpoint(eager=True)
-    return _LPA_CACHE[key]
+    return shared_table(spark, sf_dir, "lpa_membership", build,
+                        parquet=False)
 
 
 def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:

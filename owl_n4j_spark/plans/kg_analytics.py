@@ -30,7 +30,7 @@ from owl_n4j_spark.sources import events_transcripts as et
 from owl_n4j_spark.sources.events_transcripts import _BASE_CTE, _TRIPLE_LEGS
 from owl_n4j_spark.sources.ufed_xml import UFED_N_FILES
 
-_KG_CACHE: dict[tuple, dict] = {}
+_SHARED: dict[tuple, object] = {}
 
 
 def _cache_key(spark: SparkSession, sf_dir: str) -> tuple:
@@ -46,19 +46,47 @@ def warehouse_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     return f"/tmp/owl_{kind}_{os.getpid()}_{tag}"
 
 
+def shared_table(spark: SparkSession, sf_dir: str, name: str, build,
+                 parquet: bool = True):
+    """Build a shared subplan ONCE per (session, sf_dir, name) and serve
+    every later call the same object — the build-once, serve-many rule
+    for tables several queries consume.
+
+    ``parquet=True``: ``build()`` returns a DataFrame, which is written to
+    ``warehouse_dir(spark, sf_dir, name)`` and served as its read-back.
+    ``parquet=False``: ``build()``'s own result is kept — a committed
+    pipeline, a checkpointed frame (the caller's ``localCheckpoint`` sits
+    inside ``build``, so the caller keeps its eagerness), or a fixture
+    dir or stream output that ``build`` writes under ``warehouse_dir``.
+
+    Paths resolve through this module's ``warehouse_dir`` at call time,
+    so rebinding ``kg_analytics.warehouse_dir`` re-roots every shared
+    table. There is no lock: no caller reaches a shared table from two
+    threads (run_pipeline's pool touches only its committed stages). There
+    is no schema stamp: paths are per (pid, application), so no other
+    engine version ever reads them. Nothing resumes across processes —
+    that is pipeline.staged()'s job (stamp, snapshot id, chain
+    invalidation), kept apart on purpose."""
+    key = (*_cache_key(spark, sf_dir), name)
+    if key not in _SHARED:
+        if parquet:
+            path = warehouse_dir(spark, sf_dir, name)
+            build().write.mode("overwrite").parquet(path)
+            _SHARED[key] = spark.read.parquet(path)
+        else:
+            _SHARED[key] = build()
+    return _SHARED[key]
+
+
 def kg_result(spark: SparkSession, sf_dir: str) -> dict:
-    """Full pipeline over events-derived transcripts, cached per
-    (session, sf_dir) via a parquet warehouse (stage outputs committed once,
-    reused across queries and across the kg_* driver entries)."""
-    key = _cache_key(spark, sf_dir)
-    if key not in _KG_CACHE:
-        transcripts = et.transcripts_from_events(spark, sf_dir)
-        alias_dict = et.alias_dict_df(spark)
-        _KG_CACHE[key] = run_pipeline(
-            spark, transcripts, alias_dict=alias_dict,
-            warehouse=warehouse_dir(spark, sf_dir, "kg_wh"),
-            with_manifest=True)
-    return _KG_CACHE[key]
+    """Full pipeline over events-derived transcripts, committed once per
+    (session, sf_dir) to a parquet warehouse (a ``shared_table``) and
+    reused across queries and across the kg_* driver entries."""
+    return shared_table(spark, sf_dir, "kg_wh", lambda: run_pipeline(
+        spark, et.transcripts_from_events(spark, sf_dir),
+        alias_dict=et.alias_dict_df(spark),
+        warehouse=warehouse_dir(spark, sf_dir, "kg_wh"),
+        with_manifest=True), parquet=False)
 
 
 # ---------------------------------------------------------------------------
@@ -468,20 +496,14 @@ FROM agg ORDER BY subj_key, obj_key
 
 
 def ensure_ufed_xml(spark: SparkSession, sf_dir: str) -> str:
-    """Generate the UFED-XML fixture dumps once per (session, sf) —
-    test scaffolding, benchmarked under its own name so the parse
-    operator's timing stays honest."""
+    """Generate the UFED-XML fixture dumps once per (session, sf) (a
+    ``shared_table``) — test scaffolding, benchmarked under its own name so
+    the parse operator's timing stays honest."""
     from owl_n4j_spark.sources.ufed_xml import write_ufed_xml
 
-    xml_dir = warehouse_dir(spark, sf_dir, "ufed_xml")
-    marker = os.path.join(xml_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        write_ufed_xml(spark, sf_dir, xml_dir)
-        open(marker, "w").close()
-    return xml_dir
-
-
-_UFED_TURNS_CACHE: dict = {}
+    return shared_table(spark, sf_dir, "ufed_xml", lambda: write_ufed_xml(
+        spark, sf_dir, warehouse_dir(spark, sf_dir, "ufed_xml")),
+        parquet=False)
 
 
 def _ufed_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -489,20 +511,13 @@ def _ufed_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, sf): three queries consume exactly this frame — q_xml_ingest,
     q_xml_reconcile's persisted leg, and q_stream_parity's batch side —
     and each re-ran the full 200-dump iterparse (~1.2 s at sf0.1).
-    Committed to a parquet warehouse and served from there, the same
-    shared-subplan discipline as _wiretap_sessions (and exactly the
-    production shape q_xml_reconcile's docstring names: the persisted
-    side reads the ingest's already-written warehouse output)."""
+    A parquet ``shared_table`` (exactly the production shape
+    q_xml_reconcile's docstring names: the persisted side reads the
+    ingest's already-written warehouse output)."""
     from owl_n4j_spark.sources.ufed_xml import read_ufed_xml
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _UFED_TURNS_CACHE:
-        path = warehouse_dir(spark, sf_dir, "ufed_turns")
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            (read_ufed_xml(spark, ensure_ufed_xml(spark, sf_dir))
-             .write.mode("overwrite").parquet(path))
-        _UFED_TURNS_CACHE[key] = spark.read.parquet(path)
-    return _UFED_TURNS_CACHE[key]
+    return shared_table(spark, sf_dir, "ufed_turns", lambda: read_ufed_xml(
+        spark, ensure_ufed_xml(spark, sf_dir)))
 
 
 def q_xml_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,9 +764,7 @@ def case_file_kind():
 
 
 # UFED_N_FILES = write_ufed_xml's dump-file split (shared constant, so the
-# oracle cannot drift from the writer); 1 = its case_notes.txt decoy
-# (Spark's file index hides '_'-prefixed files, so _SUCCESS markers are
-# invisible to the scan by design.)
+# oracle cannot drift from the writer); 1 = its case_notes.txt decoy.
 SQL_Q_CASE_SCAN = f"""
 SELECT kind, n_files FROM (
   SELECT 'html_doc' AS kind, CAST(COUNT(*) AS BIGINT) AS n_files
@@ -783,36 +796,26 @@ SELECT kind, n_files FROM (
 
 
 def ensure_wiretap(spark: SparkSession, sf_dir: str) -> str:
-    """Generate the wiretap session-folder fixture once per (session, sf)."""
+    """Generate the wiretap session-folder fixture once per (session, sf)
+    (a ``shared_table``)."""
     from owl_n4j_spark.sources.wiretap import write_wiretap_folders
 
-    case_dir = warehouse_dir(spark, sf_dir, "wiretap")
-    marker = os.path.join(case_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        write_wiretap_folders(spark, sf_dir, case_dir)
-        open(marker, "w").close()
-    return case_dir
-
-
-_WIRETAP_SESS_CACHE: dict = {}
+    return shared_table(
+        spark, sf_dir, "wiretap", lambda: write_wiretap_folders(
+            spark, sf_dir, warehouse_dir(spark, sf_dir, "wiretap")),
+        parquet=False)
 
 
 def _wiretap_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parsed wiretap sessions, parsed ONCE per (session, sf): the folder
     scan + rtf strip is S6's expensive leg and three queries consume it
     (q_wiretap_ingest, q_wiretap_manifest, kg_wiretap_triples) — the
-    parse output is committed to a parquet warehouse and served from
-    there, the same discipline as kg_result's stage cache."""
+    parse output is a parquet ``shared_table``."""
     from owl_n4j_spark.sources.wiretap import read_wiretap_sessions
 
-    key = _cache_key(spark, sf_dir)
-    if key not in _WIRETAP_SESS_CACHE:
-        path = warehouse_dir(spark, sf_dir, "wiretap_parsed")
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            (read_wiretap_sessions(spark, ensure_wiretap(spark, sf_dir))
-             .write.mode("overwrite").parquet(path))
-        _WIRETAP_SESS_CACHE[key] = spark.read.parquet(path)
-    return _WIRETAP_SESS_CACHE[key]
+    return shared_table(
+        spark, sf_dir, "wiretap_parsed", lambda: read_wiretap_sessions(
+            spark, ensure_wiretap(spark, sf_dir)))
 
 
 def q_wiretap_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1051,7 +1054,7 @@ def q_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-fails the oracle instead of only failing a local pytest.
 
     Each stream runs ONCE per (session, sf) into a checkpointed parquet
-    warehouse (marker-guarded, the ensure_* discipline); the comparison
+    warehouse (a ``shared_table``, like the fixtures); the comparison
     itself is two set-difference aggregations — no driver-side collect."""
     from owl_n4j_spark.sources.wiretap import transcripts_from_sessions
     from owl_n4j_spark.streaming.incremental import (
@@ -1059,33 +1062,24 @@ def q_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_incremental_xml_ingest,
     )
 
-    xml_dir = ensure_ufed_xml(spark, sf_dir)
-    case_dir = ensure_wiretap(spark, sf_dir)
-    sx = warehouse_dir(spark, sf_dir, "stream_xml")
-    sw = warehouse_dir(spark, sf_dir, "stream_wt")
     # Catch-up-then-stop over a STATIC fixture: the file source re-pays the
     # recursive listing on EVERY trigger, so the production default of 1000
     # files/trigger (restart granularity for a live landing folder) turns a
     # ~20k-session catch-up into ~20 full re-listings — measured 104 s at
     # sf0.1 vs ~13 s with one big trigger. Identical rows/checkpoint
     # semantics; only the commit granularity differs.
-    # .done markers are written via tempfile+rename (atomic on POSIX): a
-    # crash between stream completion and marker write merely re-runs the
-    # stream, which the checkpoint makes a no-op catch-up (idempotent
-    # re-run contract); a torn marker file can never exist.
-    def _mark_done(path: str) -> None:
-        tmp = path + ".tmp"
-        open(tmp, "w").close()
-        os.replace(tmp, path)
+    def streamed(name: str, ingest, src_dir: str) -> DataFrame:
+        def build() -> DataFrame:
+            out = warehouse_dir(spark, sf_dir, name)
+            ingest(spark, src_dir, out, out + "_ckpt",
+                   max_files_per_trigger=100_000)
+            return spark.read.parquet(out)
+        return shared_table(spark, sf_dir, name, build, parquet=False)
 
-    if not os.path.exists(sx + ".done"):
-        run_incremental_xml_ingest(spark, xml_dir, sx, sx + "_ckpt",
-                                   max_files_per_trigger=100_000)
-        _mark_done(sx + ".done")
-    if not os.path.exists(sw + ".done"):
-        run_incremental_wiretap_ingest(spark, case_dir, sw, sw + "_ckpt",
-                                       max_files_per_trigger=100_000)
-        _mark_done(sw + ".done")
+    sx = streamed("stream_xml", run_incremental_xml_ingest,
+                  ensure_ufed_xml(spark, sf_dir))
+    sw = streamed("stream_wt", run_incremental_wiretap_ingest,
+                  ensure_wiretap(spark, sf_dir))
 
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
@@ -1112,11 +1106,9 @@ def q_stream_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                         (F.coalesce(F.col("n_diff"), F.lit(0)) == 0)
                         .alias("stream_equals_batch")))
 
-    xml = leg("ufed_xml", _ufed_turns(spark, sf_dir),
-              spark.read.parquet(sx))
+    xml = leg("ufed_xml", _ufed_turns(spark, sf_dir), sx)
     wt = leg("wiretap",
-             transcripts_from_sessions(_wiretap_sessions(spark, sf_dir)),
-             spark.read.parquet(sw))
+             transcripts_from_sessions(_wiretap_sessions(spark, sf_dir)), sw)
     return xml.unionAll(wt).orderBy("source")
 
 

@@ -17,8 +17,6 @@ shingle/token constructions are index-for-index identical.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -337,30 +335,21 @@ _DUCK_SHINGLES = (
 )
 
 
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) distinct — needs >= 3 tokens per doc.
 
-    Materialized once per (session, sf_dir) to a parquet warehouse: the
-    Jaccard pair join, the neardup pruning, and the MinHash signatures all
-    consume this table (same shared-subplan rule as the co-presence edge
-    warehouse in plans/graph_algos.py)."""
-    from owl_n4j_spark.plans.kg_analytics import _cache_key, warehouse_dir
-    key = _cache_key(spark, sf_dir)
-    if key not in _SHINGLE_CACHE:
+    A parquet ``shared_table``: the Jaccard pair join, the neardup
+    pruning, and the MinHash signatures all consume this table."""
+    from owl_n4j_spark.plans.kg_analytics import shared_table
+    def build() -> DataFrame:
         docs = load(spark, sf_dir, "documents")
-        sh = (
+        return (
             docs.withColumn("__w", _tokens_col())
             .filter(F.size("__w") >= 3)
             .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("shingle"))
             .dropDuplicates(["doc_id", "shingle"])
         )
-        path = warehouse_dir(spark, sf_dir, "shingles")
-        sh.write.mode("overwrite").parquet(path)
-        _SHINGLE_CACHE[key] = spark.read.parquet(path)
-    return _SHINGLE_CACHE[key]
+    return shared_table(spark, sf_dir, "shingles", build)
 
 
 _DUCK_SHINGLES_CTE = rf"""
@@ -399,21 +388,17 @@ shk AS (SELECT sh.doc_id, sh.shingle FROM sh JOIN kept USING (shingle))
 """
 
 
-_JACCARD_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, common, jaccard) for word-trigram Jaccard >= 0.2 over
-    capped shingles — MATERIALIZED once per (session, sf): the pairwise
+    capped shingles — a parquet ``shared_table``: the pairwise
     equi-join is the expensive leg of the near-dup family and THREE queries
     consume exactly this pair set (q_ngram_jaccard_pairs, the
     q_neardup_survivors prune, the q_corpus_curation near-dup stage —
     per-pair common/n_a/n_b depend only on the two docs, so the curation
     stage's survivor restriction is a semi-join on the endpoints, not a
-    recompute). Same shared-subplan discipline as _shingles_df."""
-    from owl_n4j_spark.plans.kg_analytics import _cache_key, warehouse_dir
-    key = _cache_key(spark, sf_dir)
-    if key not in _JACCARD_PAIRS_CACHE:
+    recompute)."""
+    from owl_n4j_spark.plans.kg_analytics import shared_table
+    def build() -> DataFrame:
         # hash-partition the capped shingles on the JOIN key at ~2 tasks
         # per core: the warehouse read is a couple of byte-sized splits,
         # and without the spread the |bucket|^2 pair-generating self-join
@@ -426,7 +411,7 @@ def _jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
         a = sh.alias("a")
         b = sh.alias("b")
-        pairs = (
+        return (
             a.join(b, on="shingle")
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
             .groupBy(F.col("a.doc_id").alias("doc_a"),
@@ -442,10 +427,7 @@ def _jaccard_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("jaccard") >= 0.2)
             .select("doc_a", "doc_b", "common", "jaccard")
         )
-        path = warehouse_dir(spark, sf_dir, "jaccard_pairs")
-        pairs.write.mode("overwrite").parquet(path)
-        _JACCARD_PAIRS_CACHE[key] = spark.read.parquet(path)
-    return _JACCARD_PAIRS_CACHE[key]
+    return shared_table(spark, sf_dir, "jaccard_pairs", build)
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -481,13 +463,10 @@ N_MINHASH = 8
 LSH_ROWS_PER_BAND = 2  # 8 hashes -> 4 bands
 
 
-_LSH_PAIRS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _lsh_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs (doc_a, doc_b, n_shared_bands),
-    MATERIALIZED once per (session, sf) — consumed by q_minhash_lsh_pairs
-    AND the q_neardup_clusters CC stage.
+    a parquet ``shared_table`` — consumed by q_minhash_lsh_pairs AND the
+    q_neardup_clusters CC stage.
 
     The K per-doc minima are computed as ONE map-side-combinable hash
     aggregation with K min columns (min is algebraic, so each map task
@@ -497,9 +476,8 @@ def _lsh_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     Band signatures are then pure column expressions over the K columns.
     md5(k || '|' || shingle) is the k-th "permutation" — identical bytes
     in both engines."""
-    from owl_n4j_spark.plans.kg_analytics import _cache_key, warehouse_dir
-    key = _cache_key(spark, sf_dir)
-    if key not in _LSH_PAIRS_CACHE:
+    from owl_n4j_spark.plans.kg_analytics import shared_table
+    def build() -> DataFrame:
         # spread the K-fold md5 work: the shingle warehouse reads back as
         # 1-2 splits (small files pack via openCostInBytes), so the
         # partial aggregation — where all K md5s per shingle run — would
@@ -525,17 +503,14 @@ def _lsh_pairs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                              F.explode(F.array(*band_structs)).alias("b"))
                  .select("doc_id", "b.band", "b.sig"))
         a, b = bands.alias("a"), bands.alias("b")
-        pairs = (
+        return (
             a.join(b, on=["band", "sig"])
             .filter(F.col("a.doc_id") < F.col("b.doc_id"))
             .groupBy(F.col("a.doc_id").alias("doc_a"),
                      F.col("b.doc_id").alias("doc_b"))
             .agg(F.count("*").alias("n_shared_bands"))
         )
-        path = warehouse_dir(spark, sf_dir, "lsh_pairs")
-        pairs.write.mode("overwrite").parquet(path)
-        _LSH_PAIRS_CACHE[key] = spark.read.parquet(path)
-    return _LSH_PAIRS_CACHE[key]
+    return shared_table(spark, sf_dir, "lsh_pairs", build)
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1776,16 +1751,14 @@ ORDER BY lang, seq_id
 
 def ensure_doc_files(spark: SparkSession, sf_dir: str) -> str:
     """Render the documents table to per-doc .html/.md files once per
-    (session, sf) — fixture scaffolding, benchmarked under its own name."""
-    from owl_n4j_spark.plans.kg_analytics import warehouse_dir
+    (session, sf) (a ``shared_table``) — fixture scaffolding, benchmarked
+    under its own name."""
+    from owl_n4j_spark.plans.kg_analytics import shared_table, warehouse_dir
     from owl_n4j_spark.sources.doc_formats import write_doc_files
 
-    doc_dir = warehouse_dir(spark, sf_dir, "doc_files")
-    marker = os.path.join(doc_dir, "_SUCCESS")
-    if not os.path.exists(marker):
-        write_doc_files(spark, sf_dir, doc_dir)
-        open(marker, "w").close()
-    return doc_dir
+    return shared_table(spark, sf_dir, "doc_files", lambda: write_doc_files(
+        spark, sf_dir, warehouse_dir(spark, sf_dir, "doc_files")),
+        parquet=False)
 
 
 def q_doc_ingest_formats(spark: SparkSession, sf_dir: str) -> DataFrame:

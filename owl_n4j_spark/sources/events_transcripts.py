@@ -53,32 +53,24 @@ def alias_dict_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(alias_dict_pandas(_universe()))
 
 
-_TRANSCRIPTS_CACHE: dict[tuple, DataFrame] = {}
-
-
 def transcripts_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derived-transcripts source, materialized ONCE per (session, sf_dir).
+    """Derived-transcripts source, a ``shared_table`` built ONCE per
+    (session, sf_dir).
 
     Every headline consumer (the bench's count + timed extraction legs,
     kg_result's pipeline, the XML fixture renderer, q_decontaminate)
     re-derived the same frame — a broadcast-join + window shuffle each
-    (~2.3 s at sf0.1). Shared-subplan discipline (guide §2.4, same as the
-    copresence_edges warehouse): compute once, serve every consumer from
-    the materialization. A LAZY localCheckpoint (not parquet) on purpose:
+    (~2.3 s at sf0.1). A LAZY localCheckpoint (not parquet) on purpose:
     it preserves the window shuffle's partitioning — a parquet round-trip
     of this ~10 MB frame would pack into one scan split and serialize the
     downstream Python extraction stage — and spills to disk at scale
-    (MEMORY_AND_DISK). Keyed by applicationId so a restarted session
-    never serves dead handles; nothing persists across processes."""
-    import os as _os
+    (MEMORY_AND_DISK)."""
+    from owl_n4j_spark.plans.kg_analytics import shared_table
 
-    key = (spark.sparkContext.applicationId, _os.path.realpath(sf_dir))
-    cached = _TRANSCRIPTS_CACHE.get(key)
-    if cached is None:
-        cached = (_transcripts_plan(spark, sf_dir)
-                  .localCheckpoint(eager=False))
-        _TRANSCRIPTS_CACHE[key] = cached
-    return cached
+    return shared_table(
+        spark, sf_dir, "transcripts",
+        lambda: _transcripts_plan(spark, sf_dir).localCheckpoint(eager=False),
+        parquet=False)
 
 
 def _transcripts_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

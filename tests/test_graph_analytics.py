@@ -69,6 +69,25 @@ def test_cc_hub_skew(spark):
     assert comps.count() == 20_001
 
 
+def test_cc_raises_at_round_cap(spark):
+    """Hash-min CC moves the minimum label one hop per round: an 80-node
+    path cannot converge within the default 25 rounds (55 labels are
+    still changing) and must raise instead of returning 55 components; a
+    20-node path converges to one component."""
+    import pytest
+    from owl_n4j_spark.operators.canonicalize import connected_components
+
+    def path(n):
+        return _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}")
+                              for i in range(n - 1)])
+
+    with pytest.raises(RuntimeError, match="in 25 rounds: 55 labels"):
+        connected_components(path(80))
+    comps = connected_components(path(20))
+    assert comps.count() == 20
+    assert comps.select("canonical_key").distinct().count() == 1
+
+
 def test_louvain_two_cliques_with_bridge(spark):
     """Two K4 cliques joined by one bridge edge: modularity local moves at
     resolution 1 must put each clique in its own community."""
