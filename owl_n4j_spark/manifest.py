@@ -5,22 +5,23 @@ persisted count per model type, with ok/under/not_supported status —
 (/root/reference/ingestion/scripts/cellebrite/ingestion.py:82-131) and uses
 it as a continuous test. This module is the Spark analog: every pipeline
 stage appends (run_id, stage, partition_id, in_rows, out_rows, quarantined,
-started_at, finished_at, snapshot_id) rows; stage-level totals live in the
-partition_id = -1 row, per-output-partition counts in the rest.
+started_at, finished_at, snapshot_id) rows, counted on the stage's own job
+(pipeline.run_pipeline's ``staged``). Stage totals live in the
+partition_id = -1 row; each committed part file ``part-NNNNN-*`` adds a
+row with partition_id = NNNNN and its parquet-footer row count.
 
 With a parquet warehouse the "snapshot" is the _SUCCESS-committed stage
 directory; on Iceberg it would be the table snapshot id — the resume logic
-(pipeline.StageRunner) only trusts committed outputs either way.
+only trusts committed outputs either way.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from owl_n4j_spark.localrel import local_df
 from pyspark.sql.types import (
@@ -40,51 +41,33 @@ MANIFEST_SCHEMA = StructType([
 ])
 
 
-def new_run_id() -> str:
-    return uuid.uuid4().hex[:16]
-
-
 class ManifestWriter:
     """Collects manifest rows for one run; optionally persists to parquet."""
 
-    def __init__(self, spark: SparkSession, run_id: str | None = None,
-                 path: str | None = None):
+    def __init__(self, spark: SparkSession, path: str | None = None):
         self.spark = spark
-        self.run_id = run_id or new_run_id()
+        self.run_id = uuid.uuid4().hex[:16]
         self.path = path
         self._rows: list[tuple] = []
 
-    def record(self, stage: str, in_rows: int, out_df: DataFrame | None = None,
-               out_rows: int | None = None, quarantined: int = 0,
-               started_at: datetime | None = None,
-               snapshot_id: str | None = None,
-               per_partition: bool = True) -> None:
-        now = datetime.now(timezone.utc)
-        started = started_at or now
-        if out_df is not None and per_partition:
-            parts = (
-                out_df.groupBy(F.spark_partition_id().alias("pid"))
-                .count().collect()
-            )
-            total = 0
-            for r in parts:
-                total += r["count"]
-                self._rows.append((self.run_id, stage, int(r["pid"]),
-                                   int(in_rows), int(r["count"]), 0,
-                                   started, now, snapshot_id))
-            out_total = total if out_rows is None else out_rows
-        else:
-            out_total = int(out_rows or 0)
-        self._rows.append((self.run_id, stage, -1, int(in_rows),
-                           int(out_total), int(quarantined), started, now,
+    def record(self, stage: str, in_rows: int, out_rows: int,
+               quarantined: int, started_at: datetime,
+               finished_at: datetime, snapshot_id: str | None = None,
+               parts: list[tuple[int, int]] = ()) -> None:
+        """One stage-total row plus one row per (partition_id, out_rows)
+        committed part file; in_rows and quarantined are not attributed
+        per file (NULL)."""
+        for pid, n in parts:
+            self._rows.append((self.run_id, stage, pid, None, n, None,
+                               started_at, finished_at, snapshot_id))
+        self._rows.append((self.run_id, stage, -1, in_rows, out_rows,
+                           quarantined, started_at, finished_at,
                            snapshot_id))
 
-    def to_df(self) -> DataFrame:
-        return local_df(self.spark, self._rows, MANIFEST_SCHEMA)
-
     def flush(self) -> DataFrame:
-        df = self.to_df()
-        if self.path:
+        """The run's rows as a DataFrame, appended to ``path`` if any."""
+        df = local_df(self.spark, self._rows, MANIFEST_SCHEMA)
+        if self.path and self._rows:
             if "://" not in self.path:
                 self._flush_local_arrow()
             else:
@@ -98,23 +81,16 @@ class ManifestWriter:
         The Spark parquet writer pays a full job + Hadoop commit cycle
         (task launch, _temporary rename dance, _SUCCESS) — measured 1-4 s
         for a 20-row frame, pure fixed cost; a direct local parquet write
-        of the same bytes is ~10 ms. Schema matches MANIFEST_SCHEMA so
-        spark.read.parquet sees the identical table either way."""
+        of the same bytes is ~10 ms. The arrow schema is derived from
+        MANIFEST_SCHEMA, so spark.read.parquet sees the identical table
+        either way."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        cols = list(zip(*self._rows)) if self._rows else [[] for _ in range(9)]
-        table = pa.table({
-            "run_id": pa.array(cols[0], pa.string()),
-            "stage": pa.array(cols[1], pa.string()),
-            "partition_id": pa.array(cols[2], pa.int32()),
-            "in_rows": pa.array(cols[3], pa.int64()),
-            "out_rows": pa.array(cols[4], pa.int64()),
-            "quarantined": pa.array(cols[5], pa.int64()),
-            "started_at": pa.array(cols[6], pa.timestamp("us", tz="UTC")),
-            "finished_at": pa.array(cols[7], pa.timestamp("us", tz="UTC")),
-            "snapshot_id": pa.array(cols[8], pa.string()),
-        })
+        schema = to_arrow_schema(MANIFEST_SCHEMA)
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in self._rows], schema=schema)
         os.makedirs(self.path, exist_ok=True)
         pq.write_table(
             table,

@@ -14,6 +14,7 @@ deterministic outputs instead of progress bookkeeping.
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -59,27 +60,48 @@ def _stage_stamp_ok(path: str) -> bool:
         return False
 
 
-def _stage_snapshot_id(path: str) -> str | None:
-    """Deterministic snapshot id of a committed stage directory — the
-    local-warehouse analog of an Iceberg snapshot id. Derived from the
-    committed LAYOUT (sorted part-file names + sizes + schema version),
-    so it is stable across resumes that serve the same commit, changes
-    whenever the stage is rewritten, and costs one directory listing —
-    never a data read. None for a non-local / unreadable warehouse (such
+def _commit_facts(path: str, started: datetime, finished: datetime) -> dict:
+    """Manifest facts of a committed stage directory, from one scan and no
+    Spark job: a (partition_id, rows) part per ``part-NNNNN-*`` file (rows
+    from its parquet footer) and the snapshot id — the local-warehouse
+    analog of an Iceberg snapshot id, derived from the committed LAYOUT
+    (sorted file names + sizes + schema version), so stable across resumes
+    of one commit. A non-local / unreadable warehouse has neither (such
     warehouses never resume either, _write_stage_stamp's contract)."""
     import hashlib
 
+    import pyarrow.parquet as pq
+
+    snapshot_id, parts = None, []
     try:
-        parts = sorted(
+        files = sorted(
             (e.name, e.stat().st_size)
             for e in os.scandir(path)
             if e.is_file() and not e.name.startswith((".", "_")))
+        parts = [(int(name.split("-")[1]),
+                  pq.read_metadata(os.path.join(path, name)).num_rows)
+                 for name, _ in files if name.startswith("part-")]
+        h = hashlib.sha1(str(STAGE_SCHEMA_VERSION).encode())
+        for name, size in files:
+            h.update(f"|{name}:{size}".encode())
+        snapshot_id = h.hexdigest()[:16]
     except OSError:
-        return None
-    h = hashlib.sha1(str(STAGE_SCHEMA_VERSION).encode())
-    for name, size in parts:
-        h.update(f"|{name}:{size}".encode())
-    return h.hexdigest()[:16]
+        pass
+    return {"parts": parts, "started_at": started, "finished_at": finished,
+            "snapshot_id": snapshot_id}
+
+
+def _count_rows(frames: dict[str, DataFrame]) -> dict[str, int]:
+    """Row count of every frame from ONE action: a no-op write of their
+    tagged union, counted by one Observation on that write."""
+    from functools import reduce
+
+    obs = Observation()
+    legs = [df.select(F.lit(k).alias("leg")) for k, df in frames.items()]
+    (reduce(DataFrame.unionByName, legs)
+     .observe(obs, *[F.count_if(F.col("leg") == k).alias(k) for k in frames])
+     .write.format("noop").mode("overwrite").save())
+    return obs.get
 
 
 def normalize_transcripts(transcripts: DataFrame) -> DataFrame:
@@ -211,17 +233,27 @@ def run_pipeline(
     if new_rejections:
         resume = False
 
-    # stage name -> snapshot id of the commit this run computed or resumed
-    # from (None without a warehouse — a localCheckpoint is not a durable
-    # snapshot and reporting one would be a lie). Manifest rows carry it so
-    # lineage says WHICH commit produced each stage's counts (K5 + the
-    # north rule's "resume from the last committed snapshot checkpoint").
-    snapshots: dict[str, str | None] = {}
+    # Manifest facts per staged name of the commit this run computed or
+    # resumed from (K5 + the north rule's "resume from the last committed
+    # snapshot checkpoint"), row counts, and the frames no write counted.
+    stages: dict[str, dict] = {}
+    counts: dict[str, int] = {}
+    uncounted: dict[str, DataFrame] = {}
     import threading
     _resume_lock = threading.Lock()
+    pass_started = datetime.now(timezone.utc)
 
     def staged(name: str, df_fn, chain: dict | None = None) -> DataFrame:
-        """Compute-or-resume one stage through the warehouse.
+        """Compute-or-resume one stage; the one place that accounts for a
+        stage in the manifest.
+
+        With a warehouse, one Observation row count rides the stage's write
+        job, and started/finished bracket the stage's compute and write (CC
+        rounds included). One scan of the committed directory then gives
+        the snapshot id and a row per ``part-NNNNN-*`` file (partition_id =
+        NNNNN, out_rows from the file's parquet footer). A resumed stage
+        takes its total and part rows from that scan, with no Spark job,
+        and records zero duration.
 
         Without a warehouse the stage output is localCheckpoint-ed: this both
         computes the stage exactly once AND truncates the logical plan at the
@@ -239,10 +271,15 @@ def run_pipeline(
         each on local[32]) was the dominant pipeline cost at bench scale,
         and at cluster scale fewer barriers only helps (guide §1.2: remove
         passes). Stages with driver-side loops between them (the CC
-        fixpoint) materialize at their own actions regardless."""
+        fixpoint) materialize at their own actions regardless. An
+        Observation on a lazy checkpoint resolves when the checkpoint is
+        DEFINED, before its rows flow, so batch stages are counted by the
+        one action after the pass, and write stage totals only, each
+        spanning the whole pass (its stages fuse into one job)."""
         nonlocal resume
         if warehouse is None:
-            return df_fn().localCheckpoint(eager=False)
+            uncounted[name] = df_fn().localCheckpoint(eager=False)
+            return uncounted[name]
         path = os.path.join(warehouse, name)
         # Schema-evolution guard, GENERIC across every stage: each commit
         # is stamped with STAGE_SCHEMA_VERSION; a committed stage whose
@@ -264,39 +301,41 @@ def run_pipeline(
         with _resume_lock:
             ok = resume if chain is None else chain["ok"]
             if ok and stage_is_committed(path) and _stage_stamp_ok(path):
-                snapshots[name] = _stage_snapshot_id(path)
+                now = datetime.now(timezone.utc)
+                stages[name] = _commit_facts(path, now, now)
+                counts[name] = sum(n for _, n in stages[name]["parts"])
                 return spark.read.parquet(path)
             if chain is None:
                 resume = False
             else:
                 chain["ok"] = False
-        df = df_fn()
-        df.write.mode("overwrite").parquet(path)
+        started = datetime.now(timezone.utc)
+        obs = Observation()
+        (df_fn().observe(obs, F.count(F.lit(1)).alias("n"))
+         .write.mode("overwrite").parquet(path))
         _write_stage_stamp(path)
-        snapshots[name] = _stage_snapshot_id(path)
+        stages[name] = _commit_facts(path, started, datetime.now(timezone.utc))
+        counts[name] = obs.get["n"]
         return spark.read.parquet(path)
 
     # ---- stage 1: normalize ------------------------------------------------
-    # Manifest input-counts ride the stage's own action as OBSERVED metrics
-    # (Observation API) instead of separate count jobs: at 100 TB a
-    # dedicated `transcripts.agg(...)` scan re-reads the whole input once
-    # more just for bookkeeping. The observation resolves when the staged
-    # write/checkpoint executes; a RESUMED stage never executes, so the
-    # fallback recount only happens on resume (where the replay the counts
-    # would have cost was already skipped).
+    # The input counts ride the stage's warehouse write as an Observation:
+    # at 100 TB a separate count would re-read the whole input just for
+    # bookkeeping. A resumed stage never executes, and a batch checkpoint
+    # resolves the Observation before rows flow, so those runs count the
+    # input in the one counting action after the pass.
+    valid_turn = F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
     norm_obs = None
     if records_df is None:
         def _normalize():
             nonlocal norm_obs
             src = transcripts
-            if with_manifest:
+            if with_manifest and warehouse is not None:
                 norm_obs = Observation()
                 src = src.observe(
                     norm_obs,
                     F.count(F.lit(1)).alias("n_in"),
-                    F.count(F.when(F.col("conv_id").isNotNull()
-                                   & F.col("turn_idx").isNotNull(), 1))
-                     .alias("n_valid"))
+                    F.count(F.when(valid_turn, 1)).alias("n_valid"))
             return normalize_transcripts(src)
 
         clean = staged("t01_normalized", _normalize)
@@ -402,17 +441,14 @@ def run_pipeline(
     else:
         mentions, nodes = _chain_mentions_nodes()
         triples = staged("t05_triples", _triples)
-    # Referential-quarantine accounting also rides the stage action: the
-    # pre-filter edge count is OBSERVED on the build feeding the staged
-    # write (r3 shape ran the edge build THREE times — two counts + the
-    # write; now it runs once) and the post-filter count is a cheap
-    # metadata count on the staged parquet.
+    # Referential quarantine: the pre-filter edge count rides the t07 write
+    # the same way; the post-filter count is the stage's own.
     edge_obs = None
 
     def _edges():
         nonlocal edge_obs
         e = build_edges(triples, case_id)
-        if with_manifest:
+        if with_manifest and warehouse is not None:
             edge_obs = Observation()
             e = e.observe(edge_obs, F.count(F.lit(1)).alias("n_all"))
         valid, _ = enforce_referential(e, nodes, count_drops=False)
@@ -421,55 +457,42 @@ def run_pipeline(
     edges = staged("t07_edges", _edges)
 
     if with_manifest:
-        n_valid_edges = edges.count()
+        # Counts no write observed (every batch stage, a resumed run's
+        # input counts) come from ONE action; in the batch path it is the
+        # action that materializes t07 and every stage before it.
+        if norm_obs is not None:
+            counts.update(norm_obs.get)
+        elif records_df is None:
+            uncounted["n_in"] = transcripts
+            uncounted["n_valid"] = transcripts.filter(valid_turn)
         if edge_obs is not None:
-            n_all_edges = int(edge_obs.get["n_all"])
-        else:   # stage resumed from committed parquet: replay for the count
-            n_all_edges = build_edges(triples, case_id).count()
-        mw.record("edges_referential", in_rows=n_all_edges,
-                  out_df=None, out_rows=n_valid_edges,
-                  quarantined=n_all_edges - n_valid_edges,
-                  per_partition=False,
-                  snapshot_id=snapshots.get("t07_edges"))
+            counts.update(edge_obs.get)
+        else:
+            uncounted["n_all"] = build_edges(triples, case_id)
+        if uncounted:
+            counts.update(_count_rows(uncounted))
+        whole_pass = {"started_at": pass_started,
+                      "finished_at": datetime.now(timezone.utc)}
 
-    if with_manifest:
+        def record(stage: str, name: str, in_rows: int, quarantined=0):
+            mw.record(stage, in_rows, counts[name], quarantined,
+                      **stages.get(name, whole_pass))
+
         if records_df is None:
             # quarantined = rows REJECTED (no thread identity/position);
             # duplicate-turn collapse is NOT quarantine — it shows as the
-            # in_rows/out_rows gap beyond the quarantine count (VERDICT r01
-            # flagged the old n_in - n_clean, which conflated the two).
-            if norm_obs is not None:
-                m = norm_obs.get          # resolved by the stage-1 action
-                n_in, n_valid_in = int(m["n_in"]), int(m["n_valid"])
-            else:                         # stage resumed: recount the input
-                agg = transcripts.agg(
-                    F.count("*").alias("n_in"),
-                    F.count(F.when(F.col("conv_id").isNotNull()
-                                   & F.col("turn_idx").isNotNull(), 1))
-                     .alias("n_valid")).collect()[0]
-                n_in, n_valid_in = agg["n_in"], agg["n_valid"]
-            n_clean = clean.count()
-            mw.record("normalize", in_rows=n_in, out_df=clean,
-                      quarantined=n_in - n_valid_in,
-                      snapshot_id=snapshots.get("t01_normalized"))
-            mw.record("extract", in_rows=n_clean, out_df=records,
-                      snapshot_id=snapshots.get("t02_records"))
-        # one count action serves both manifest rows that need the record
-        # total (r2 verdict: records.count() ran twice here)
-        n_records = records.count()
-        if records_df is not None:
-            mw.record("extract_external", in_rows=n_records, out_df=records,
-                      snapshot_id=snapshots.get("t02_records"))
-        mw.record("link_canonicalize", in_rows=final_mapping.count(),
-                  out_df=final_mapping,
-                  snapshot_id=snapshots.get("t03_mapping"))
-        mw.record("triples", in_rows=n_records, out_df=triples,
-                  snapshot_id=snapshots.get("t05_triples"))
-        mw.record("materialize_nodes", in_rows=mentions.count(), out_df=nodes,
-                  snapshot_id=snapshots.get("t06_nodes"))
-        manifest = mw.flush()
-    else:
-        manifest = mw.to_df()
+            # in_rows/out_rows gap beyond the quarantine count.
+            record("normalize", "t01_normalized", counts["n_in"],
+                   counts["n_in"] - counts["n_valid"])
+            record("extract", "t02_records", counts["t01_normalized"])
+        else:
+            record("extract_external", "t02_records", counts["t02_records"])
+        record("link_canonicalize", "t03_mapping", counts["t03_mapping"])
+        record("triples", "t05_triples", counts["t02_records"])
+        record("materialize_nodes", "t06_nodes", counts["t04_mentions"])
+        record("edges_referential", "t07_edges", counts["n_all"],
+               counts["n_all"] - counts["t07_edges"])
+    manifest = mw.flush()
 
     # Merge-audit projection (U4): every canonicalization decision as
     # member -> canonical with its method and whether SAME_AS evidence (the
