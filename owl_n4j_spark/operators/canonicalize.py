@@ -46,7 +46,7 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-def _checkpoint_count(df: DataFrame, counted) -> tuple[DataFrame, int]:
+def checkpoint_count(df: DataFrame, counted) -> tuple[DataFrame, int]:
     """Eagerly checkpoint ``df`` and return it with the number of rows
     where ``counted`` holds, observed on the checkpoint's own job."""
     obs = Observation()
@@ -73,7 +73,7 @@ def connected_components(
     election over incidental aliases (e.g. "emerald-imports-ltd" beats the
     short form "emerald-imports").
     """
-    sym, n_sym = _checkpoint_count(symmetrize(edges), F.lit(True))
+    sym, n_sym = checkpoint_count(symmetrize(edges), F.lit(True))
     # Empty edge set (common: a corpus whose extraction emitted no SAME_AS
     # evidence) — every vertex is its own component and the label machinery
     # (labels0 checkpoint + one no-op round, 2 scheduled jobs) would
@@ -119,7 +119,7 @@ def connected_components(
         )
         # Convergence: the changed-label count is observed on the round's
         # own checkpoint job — no separate poll job per round.
-        new_labels, n_changed = _checkpoint_count(new_labels, F.col("changed"))
+        new_labels, n_changed = checkpoint_count(new_labels, F.col("changed"))
         labels = new_labels.drop("changed")
         if n_changed == 0:
             break

@@ -1,11 +1,19 @@
-"""Distributed graph analytics: label propagation (communities) and
-sampled-source Brandes betweenness.
+"""Distributed graph analytics: the one BFS frontier kernel, label
+propagation (communities), Louvain local moves and sampled-source Brandes
+betweenness.
 
 The reference implements Louvain and betweenness as in-Python loops over the
 whole edge list pulled out of Neo4j (/root/reference/backend/services/
 neo4j_service.py:1641-1885 Louvain, :1886-2092 Brandes BFS) — single-machine,
-memory-bound at case scale. Here both are DataFrame iterations:
+memory-bound at case scale. Here all of them are DataFrame iterations:
 
+- BFS: ``bfs_levels`` is the only level-synchronous frontier loop. It is
+  multi-source — every level is keyed by (source, vertex) — so K sources
+  cost one join per level, not K traversals. Each level carries sigma, the
+  shortest-path count, summed in the same aggregation that dedups the
+  frontier. Shortest paths (one seed), pair paths (K seeds) and the forward
+  pass of betweenness all run it; the loop stops on the row count observed
+  on each level's own checkpoint job, with no emptiness poll.
 - LPA: synchronous label propagation; each round one join + one
   argmax-by-count aggregation (struct-min, map-side combinable, salted by
   AQE). Deterministic: ties break to the smaller label, fixed round count.
@@ -25,7 +33,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from owl_n4j_spark.localrel import local_df
-from owl_n4j_spark.operators.canonicalize import symmetrize
+from owl_n4j_spark.operators.canonicalize import checkpoint_count, symmetrize
+
+
+def bfs_levels(adj: DataFrame, seeds: DataFrame,
+               max_depth: int) -> list[DataFrame]:
+    """Multi-source BFS: symmetric adjacency ``adj(a, b)`` + ``seeds(s, v)``
+    -> levels ``(s, v, sigma)``, level d at index d: the vertices source s
+    first reaches at hop d, with their shortest-path counts (seeds: 1.0).
+
+    Each round joins the last level against ``adj``, sums sigma per
+    (s, v) — the one aggregation also dedups the frontier — and anti-joins
+    the lazy union of the earlier levels, so it materializes one job: the
+    new level's checkpoint. The loop stops after ``max_depth`` rounds or
+    when that job observes no row; the empty level is not returned.
+    Every level is a checkpoint leaf, so callers union them cheaply.
+    """
+    level, n = checkpoint_count(
+        seeds.select("s", "v", F.lit(1.0).alias("sigma")), F.lit(True))
+    levels, seen = [level], level.select("s", "v")
+    nbr = adj.withColumnRenamed("a", "v")
+    while n and len(levels) <= max_depth:
+        level, n = checkpoint_count(
+            levels[-1].join(nbr, on="v")
+            .groupBy("s", F.col("b").alias("v"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(seen, on=["s", "v"], how="left_anti"), F.lit(True))
+        if n:
+            levels.append(level)
+            seen = seen.unionByName(level.select("s", "v"))
+    return levels
 
 
 def label_propagation(edges: DataFrame, max_iter: int = 5) -> DataFrame:
@@ -132,8 +169,8 @@ def betweenness_sampled(edges: DataFrame, sources: list,
     sources = all vertices), run as a MULTI-SOURCE vectorized BFS: every
     frontier/level/delta table is keyed by (source, vertex), so all sources
     advance in the same joins — the job count is O(diameter), not
-    O(diameter × |sources|). Forward pass computes sigma (shortest-path
-    counts) level by level; backward pass accumulates
+    O(diameter × |sources|). The forward pass is ``bfs_levels`` (sigma =
+    shortest-path counts per level); the backward pass accumulates
     delta[v] = Σ_w sigma_v/sigma_w · (1 + delta[w]) over successors w.
     Endpoints excluded, undirected halving applied.
     """
@@ -141,31 +178,9 @@ def betweenness_sampled(edges: DataFrame, sources: list,
     spark = edges.sparkSession
     is_str = dict(edges.dtypes).get("src") == "string"
     vtype = "string" if is_str else "long"
-    seed = local_df(
-        spark,
-        [((s if is_str else int(s)), (s if is_str else int(s)), 1.0)
-         for s in sources],
-        f"s {vtype}, v {vtype}, sigma double")
-
-    # ---- forward: levels of (s, v, sigma) --------------------------------
-    # The visited set is a lazy union over the level checkpoints (leaf
-    # scans), so each BFS round materializes exactly one job — the new
-    # level's checkpoint — instead of re-checkpointing `seen` every round.
-    levels = [seed.localCheckpoint(eager=True)]
-    for _ in range(max_depth):
-        seen = levels[0].select("s", "v")
-        for lv in levels[1:]:
-            seen = seen.unionByName(lv.select("s", "v"))
-        nxt = (
-            levels[-1].join(sym.withColumnRenamed("a", "v"), on="v")
-            .groupBy("s", F.col("b").alias("v"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(seen, on=["s", "v"], how="left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
+    seeds = local_df(spark, [(v, v) for v in (
+        sources if is_str else map(int, sources))], f"s {vtype}, v {vtype}")
+    levels = bfs_levels(sym, seeds, max_depth)
 
     # ---- backward: dependency accumulation per (s, v) --------------------
     # Each level's contrib is checkpointed (it is the next level's delta
@@ -201,7 +216,7 @@ def betweenness_sampled(edges: DataFrame, sources: list,
                          .join(contrib, on=["s", "v"]).select("v", "delta"))
 
     if not parts:
-        return spark.createDataFrame([], "vertex string, score double")
+        return spark.createDataFrame([], f"vertex {vtype}, score double")
     total = parts[0]
     for p in parts[1:]:
         total = total.unionByName(p)

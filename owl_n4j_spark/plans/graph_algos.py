@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from owl_n4j_spark.operators.canonicalize import connected_components
 from owl_n4j_spark.operators.graph_analytics import (
     betweenness_sampled,
+    bfs_levels,
     label_propagation,
     louvain_communities,
 )
@@ -85,6 +86,10 @@ verts AS (SELECT DISTINCT a AS v FROM sym)
 
 
 def _sym(edges: DataFrame) -> DataFrame:
+    """Both orientations of ``edges(a, b)``. Precondition: the input is
+    unique under a < b, as ``copresence_edges`` is, so the plain union is
+    already the distinct adjacency — ``canonicalize.symmetrize`` would add
+    a dedup exchange (one more job in ``q_graph_degree``)."""
     return edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
 
@@ -325,40 +330,23 @@ FROM comp GROUP BY component ORDER BY component
 BFS_MAX_DEPTH = 8
 
 
+def _with_depth(levels: list[DataFrame]) -> DataFrame:
+    """``bfs_levels`` leaves -> one lazy union of (s, v, d), d = hop count."""
+    dist = levels[0].select("s", "v", F.lit(0).alias("d"))
+    for d, lv in enumerate(levels[1:], 1):
+        dist = dist.unionByName(lv.select("s", "v", F.lit(d).alias("d")))
+    return dist
+
+
 def q_graph_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-source shortest hop-counts (SURVEY G2) from the minimum vertex
-    via iterative frontier expansion — each round one equi-join of the
-    frontier against the adjacency list, new vertices only (visited
-    anti-join), bounded depth. Oracle: recursive-CTE min-distance closure."""
+    """Single-source shortest hop-counts (SURVEY G2) from the minimum vertex:
+    the one-seed case of the ``bfs_levels`` frontier kernel, bounded depth.
+    The seed is picked inside the plan (NULL on an empty graph, filtered
+    like the oracle's HAVING). Oracle: recursive-CTE min-distance closure."""
     sym = _sym(copresence_edges(spark, sf_dir)).localCheckpoint(eager=True)
-    seed = sym.agg(F.min("a")).collect()[0][0]
-    frontier = (sym.select(F.col("a").alias("v")).dropDuplicates()
-                .filter(F.col("v") == seed)
-                .withColumn("d", F.lit(0))
-                .localCheckpoint(eager=True))
-    # Levels accumulate as a list of checkpoint LEAVES; the visited set and
-    # the final dist are lazy unions over those leaves (a <= depth-way union
-    # of leaf scans is cheap to analyze), so each round runs exactly one
-    # materializing job (the frontier checkpoint) instead of two.
-    levels = [frontier]
-    for depth in range(1, BFS_MAX_DEPTH + 1):
-        seen = levels[0].select("v")
-        for lv in levels[1:]:
-            seen = seen.unionByName(lv.select("v"))
-        nxt = (
-            frontier.join(sym.withColumnRenamed("a", "v"), on="v")
-            .select(F.col("b").alias("v")).dropDuplicates()
-            .join(seen, on="v", how="left_anti")
-            .withColumn("d", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        frontier = nxt
-    dist = levels[0]
-    for lv in levels[1:]:
-        dist = dist.unionByName(lv)
+    seed = (sym.agg(F.min("a").alias("v")).filter(F.col("v").isNotNull())
+            .select(F.col("v").alias("s"), "v"))
+    dist = _with_depth(bfs_levels(sym, seed, BFS_MAX_DEPTH))
     return (dist.select(F.col("v").alias("user_id"),
                         F.col("d").cast("bigint").alias("dist"))
             .orderBy("user_id"))
@@ -386,11 +374,12 @@ PAIR_BFS_DEPTH = 10  # the reference's <= 10-hop cap
 def q_graph_pair_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise shortest hop-distances between a SELECTED key set (SURVEY
     G2 proper — neo4j_service.py:1359-1460 returns the path subgraph
-    between user-selected nodes, <= 10 hops). Runs ONE multi-source BFS:
-    the frontier carries a source column ``s``, so every round is a single
-    (s, v)-keyed equi-join of all frontiers against the shared adjacency
-    list — K sources cost one join per level, not K traversals, which is
-    the difference between O(depth) and O(K * depth) shuffles at scale.
+    between user-selected nodes, <= 10 hops). Runs ONE multi-source BFS,
+    the K-seed case of ``bfs_levels``: the frontier carries a source column
+    ``s``, so every round is a single (s, v)-keyed equi-join of all
+    frontiers against the shared adjacency list — K sources cost one join
+    per level, not K traversals, which is the difference between O(depth)
+    and O(K * depth) shuffles at scale.
     The selected set here is the PAIR_BFS_KEYS lowest vertex ids
     (deterministic stand-in for the UI selection); output is
     (src, dst, hop_dist) for reachable selected pairs, src < dst."""
@@ -398,28 +387,8 @@ def q_graph_pair_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = (sym.select(F.col("a").alias("v")).dropDuplicates()
              .orderBy("v").limit(PAIR_BFS_KEYS)
              .localCheckpoint(eager=True))  # <= PAIR_BFS_KEYS rows
-    frontier = (seeds.select(F.col("v").alias("s"), "v")
-                .withColumn("d", F.lit(0)))
-    levels = [frontier.localCheckpoint(eager=True)]
-    frontier = levels[0]
-    for depth in range(1, PAIR_BFS_DEPTH + 1):
-        seen = levels[0].select("s", "v")
-        for lv in levels[1:]:
-            seen = seen.unionByName(lv.select("s", "v"))
-        nxt = (
-            frontier.join(sym.withColumnRenamed("a", "v"), on="v")
-            .select("s", F.col("b").alias("v")).dropDuplicates()
-            .join(seen, on=["s", "v"], how="left_anti")
-            .withColumn("d", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        levels.append(nxt)
-        frontier = nxt
-    dist = levels[0]
-    for lv in levels[1:]:
-        dist = dist.unionByName(lv)
+    dist = _with_depth(bfs_levels(
+        sym, seeds.select(F.col("v").alias("s"), "v"), PAIR_BFS_DEPTH))
     return (
         dist.join(F.broadcast(seeds), on="v")  # dst must be selected too
         .filter(F.col("s") < F.col("v"))

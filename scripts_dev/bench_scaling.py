@@ -180,7 +180,7 @@ Method: input parquet written once; each run is a fresh SparkSession
 only partitioning variable, AQE on); a 2%-sample extraction warm-up excluded
 from timing amortizes JVM codegen + Python-worker startup; extraction is the
 Arrow-batched `mapInPandas` stage alone; the full pipeline includes linking,
-salted hash-min connected components, and node/edge materialization (fixed
+hash-min connected components, and node/edge materialization (fixed
 iteration/shuffle latencies in those stages bound full-pipeline scaling
 below extraction scaling).
 

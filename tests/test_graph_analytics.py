@@ -1,8 +1,15 @@
-"""LPA communities and sampled Brandes betweenness on fixtures with known
-ground truth."""
+"""LPA communities, the BFS frontier kernel and sampled Brandes betweenness
+on fixtures with known ground truth."""
 
+import random
+from collections import defaultdict
+
+import pytest
+
+from owl_n4j_spark.operators.canonicalize import symmetrize
 from owl_n4j_spark.operators.graph_analytics import (
     betweenness_sampled,
+    bfs_levels,
     label_propagation,
 )
 
@@ -52,11 +59,134 @@ def test_betweenness_star_center(spark):
     assert abs(scores["c"] - 6.0) < 1e-9
 
 
+def test_betweenness_empty_result_keeps_vertex_type(spark):
+    """No dependency reaches level 2 (a single edge; a centre source whose
+    neighbours are all leaves): the empty result still has the input's
+    vertex type, as a non-empty one does."""
+    one_edge = spark.createDataFrame([(1, 2)], "src long, dst long")
+    path3 = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    for edges, sources in ((one_edge, [1, 2]), (path3, [2])):
+        got = betweenness_sampled(edges, sources=sources)
+        assert got.dtypes == [("vertex", "bigint"), ("score", "double")]
+        assert got.count() == 0
+    assert betweenness_sampled(path3, sources=[1]).dtypes[0] == (
+        "vertex", "bigint")
+
+
+def _bfs_oracle(pairs, sources, max_depth):
+    """Driver-side BFS with shortest-path counting -> {(s, v, d, sigma)}."""
+    adj = defaultdict(set)
+    for a, b in pairs:
+        adj[a].add(b)
+        adj[b].add(a)
+    out = set()
+    for s in sources:
+        sigma, frontier = {s: 1}, [s]
+        out.add((s, s, 0, 1.0))
+        for d in range(1, max_depth + 1):
+            nxt = defaultdict(int)
+            for u in frontier:
+                for w in adj[u]:
+                    if w not in sigma:
+                        nxt[w] += sigma[u]
+            if not nxt:
+                break
+            sigma.update(nxt)
+            frontier = list(nxt)
+            out.update((s, w, d, float(n)) for w, n in nxt.items())
+    return out
+
+
+def _random_forest(rng, n):
+    """Each vertex hangs off a random earlier one, or starts a new tree."""
+    return [(rng.randrange(i), i) for i in range(1, n) if rng.random() < 0.97]
+
+
+def _grid(w):
+    """w x w grid: many equal-length shortest paths (sigma > 1)."""
+    return ([(r * w + c, r * w + c + 1) for r in range(w) for c in range(w - 1)]
+            + [(r * w + c, (r + 1) * w + c)
+               for r in range(w - 1) for c in range(w)])
+
+
+_RNG = random.Random(7)
+_FOREST = _random_forest(_RNG, 1000)
+BFS_CASES = {
+    # longer than max_depth: must stop at the cap; 5000 is not in adj
+    "path": ([(i, i + 1) for i in range(199)], [0, 100, 199, 5000], 8),
+    "star": ([(0, i) for i in range(1, 301)], [0, 1, 2], 8),
+    "binary_tree": ([((i - 1) // 2, i) for i in range(1, 1023)],
+                    [0, 511, 1022], 8),
+    "random_forest": (_FOREST, _RNG.sample(range(1000), 5), 12),
+    "grid": (_grid(8), [0, 7, 27, 63], 16),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BFS_CASES))
+def test_bfs_levels_match_driver_bfs(spark, case):
+    pairs, sources, max_depth = BFS_CASES[case]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    seeds = spark.createDataFrame([(s, s) for s in sources],
+                                  "s long, v long")
+    levels = bfs_levels(symmetrize(edges), seeds, max_depth)
+    got = [(r["s"], r["v"], d, r["sigma"])
+           for d, lv in enumerate(levels) for r in lv.collect()]
+    assert len(got) == len(set(got))
+    want = _bfs_oracle(pairs, sources, max_depth)
+    assert set(got) == want
+    assert len(levels) == 1 + max(d for _, _, d, _ in want)
+    if case == "path":
+        assert len(levels) == max_depth + 1
+
+
+def test_bfs_levels_empty_inputs(spark):
+    adj = symmetrize(spark.createDataFrame([(1, 2), (2, 3)],
+                                           "src long, dst long"))
+    no_seeds = spark.createDataFrame([], "s long, v long")
+    levels = bfs_levels(adj, no_seeds, 5)
+    assert len(levels) == 1 and levels[0].count() == 0
+
+    no_adj = spark.createDataFrame([], "a long, b long")
+    seeds = spark.createDataFrame([(1, 1), (9, 9)], "s long, v long")
+    levels = bfs_levels(no_adj, seeds, 5)
+    assert len(levels) == 1
+    assert sorted(map(tuple, levels[0].collect())) == [(1, 1, 1.0),
+                                                       (9, 9, 1.0)]
+
+
+def _jobs_of(spark, fn):
+    """Number of Spark jobs ``fn`` runs (jobs outside any job group)."""
+    st = spark.sparkContext.statusTracker()
+    mark = max(st.getJobIdsForGroup(None), default=-1)
+    fn()
+    return len([j for j in st.getJobIdsForGroup(None) if j > mark])
+
+
+def test_betweenness_jobs_per_bfs_level(spark):
+    """All-sources betweenness on an n- and a 2n-node path: the n extra BFS
+    levels cost 18 jobs each (local[4], 8 shuffle partitions). With an
+    ``isEmpty()`` poll after each level's checkpoint they cost 19; the stop
+    is read from the count observed on the checkpoint job instead. A slope,
+    not a total: the order in which AQE's query stages finish moves totals
+    by 1-3 jobs, so each size takes the fewer of two runs."""
+    n = 8
+
+    def jobs(size):
+        e = spark.createDataFrame([(i, i + 1) for i in range(size - 1)],
+                                  "src long, dst long")
+        return min(_jobs_of(spark, lambda: betweenness_sampled(
+            e, sources=list(range(size)), max_depth=2 * size).collect())
+            for _ in range(2))
+
+    slope = (jobs(2 * n) - jobs(n)) / n
+    assert slope < 18.5, slope
+
+
 def test_cc_hub_skew(spark):
     """Canonicalization CC under extreme hub skew (the documented 70k-rel
     contact): a star with 20,000 leaves must resolve to ONE component whose
-    canonical is the priority-preferred key, through the salted two-stage
-    min aggregation."""
+    canonical is the priority-preferred key, through the map-side combined
+    hash-min aggregation."""
     from pyspark.sql import functions as F
     from owl_n4j_spark.operators.canonicalize import connected_components
 
