@@ -484,7 +484,6 @@ _DOC_ID = re.compile(r"doc_(\d+)\.")
 
 
 def read_documents_dir(spark: SparkSession, doc_dir: str,
-                       coalesce_to: int | str | None = "auto",
                        with_status: bool = False) -> DataFrame:
     """Directory of per-document files -> documents contract.
 
@@ -502,13 +501,12 @@ def read_documents_dir(spark: SparkSession, doc_dir: str,
     docs-extracted — the K5 discipline applied to the document path. One
     corrupt evidence file must never abort a 100 TB ingest.
 
-    ``coalesce_to``: binaryFile's 4 MB open-cost makes one task per small
-    file (a 5000-doc corpus = 5000 tasks of microseconds each); coalesce —
-    shuffle-free — packs them. The default "auto" sizes the pack count to
-    the CLUSTER (2x total cores), never a fixed constant: a literal 64
-    would cap this CPU-bound Python extraction stage at 64 tasks and idle
-    a 1000-core cluster. Pass an int to pin it, or None for large-dump
-    corpora where one file per task is the right parallel unit."""
+    Packing: binaryFile's 4 MB open-cost makes one task per small file (a
+    5000-doc corpus = 5000 tasks of microseconds each), so the scan is
+    coalesced — shuffle-free — to 2x the cluster's total cores. The pack
+    count follows the CLUSTER, never a fixed constant: a literal 64 would
+    cap this CPU-bound Python extraction stage at 64 tasks and idle a
+    1000-core cluster."""
     import pandas as pd
 
     # load the DIRECTORY, not a glob: a glob expands to one load path per
@@ -520,11 +518,8 @@ def read_documents_dir(spark: SparkSession, doc_dir: str,
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.*")
              .load(doc_dir)
-             .select("path", "content"))
-    if coalesce_to == "auto":
-        coalesce_to = spark.sparkContext.defaultParallelism * 2
-    if coalesce_to is not None:
-        files = files.coalesce(coalesce_to)
+             .select("path", "content")
+             .coalesce(spark.sparkContext.defaultParallelism * 2))
 
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     if with_status:

@@ -20,12 +20,16 @@ that path Spark-first:
   source (parity with the events-derived transcripts is asserted
   turn-for-turn in tests/test_ufed_xml.py).
 
-The same streamed parse also emits ATTACHMENT models (depth-3 nested:
-receipt/photo metadata with EXIF datetime + sexagesimal GPS headers —
-``read_ufed_attachments``; SURVEY S3/J10), and runs as a Structured
-Streaming source over landing dumps
+ONE PARSE PATH: ``parse_dumps`` is the only per-dump loop. It turns a
+``files(path)`` frame into rows of one ``emit`` kind — transcript turns
+(``read_ufed_xml``), ATTACHMENT models (depth-3 nested: receipt/photo
+metadata with EXIF datetime + sexagesimal GPS headers —
+``read_ufed_attachments``; SURVEY S3/J10) or one row per model for the
+per-type reconciliation (``read_ufed_models``) — and it is also the parse
+of the Structured Streaming source over landing dumps
 (``streaming.incremental.read_xml_dump_stream``; exactly-once per dump
-via checkpointed offsets).
+via checkpointed offsets). A truncated dump keeps its complete batches
+in every one of them.
 
 The GENERATOR (``write_ufed_xml``) is test scaffolding: it renders the
 driver ``events`` table through transcripts_from_events into UFED-shaped
@@ -40,6 +44,8 @@ import re
 from xml.sax.saxutils import escape
 
 from pyspark.sql import DataFrame, SparkSession
+
+from owl_n4j_spark.synth import TRANSCRIPT_SCHEMA
 
 XML_NS = "urn:ufed-models"
 _BATCH_ROWS = 5000
@@ -69,8 +75,6 @@ UFED_HELPER = {"Attachment", "Party"}
 UFED_SKIPPED = {"CalendarEntry"}
 # anything else seen in a dump is "not_supported": no writer exists and the
 # ingest must say so loudly instead of silently dropping the instances.
-TRANSCRIPT_SCHEMA = ("conv_id string, turn_idx int, role string, "
-                     "text string, tool string, ts timestamp")
 
 
 def _sexagesimal(dec: float) -> tuple[str, str]:
@@ -464,42 +468,52 @@ def _open_dump(path: str):
     return open(path.replace("file:", ""), "rb")
 
 
-def read_ufed_xml(spark: SparkSession, xml_dir: str,
-                  with_source: bool = False) -> DataFrame:
-    """UFED XML directory -> transcripts DataFrame (the S1 operator).
-
-    One task per file; the per-file parse streams batches through Arrow
-    while iterparse reads straight from disk (see _dump_paths).
-
-    ``with_source=True`` appends a ``src_file`` column (dump basename) —
-    the extraction-attribution the cross-extraction intersection needs."""
+def parse_dumps(files: DataFrame, emit: str, schema: str) -> DataFrame:
+    """``files(path)`` -> the ``emit`` rows of every dump, in ``schema``'s
+    column order: the one per-dump parse loop of every UFED reader, batch
+    and streaming. Each task opens its dumps locally and streams
+    _parse_ufed_stream's batches through Arrow; a malformed dump keeps its
+    complete batches (_salvage_batches). ``schema`` names the emitted
+    tuple's fields in order, plus an optional ``src_file`` (the dump
+    basename) anywhere. The fix-ups follow the schema: a timestamp column
+    is parsed ISO8601 and int/bigint columns take their width."""
     import pandas as pd
 
-    files = _dump_paths(spark, xml_dir)
+    types = dict(c.split() for c in schema.split(","))
+    cols = [c for c in types if c != "src_file"]
+    widths = {"int": "int32", "bigint": "int64"}
 
     def parse(batches):
         for pdf in batches:
             for path in pdf["path"]:
                 with _open_dump(path) as fh:
-                    gen = _parse_ufed_stream(fh)
+                    gen = _parse_ufed_stream(fh, emit=emit)
                     for rows in _salvage_batches(gen, path):
-                        out = pd.DataFrame(
-                            rows, columns=["conv_id", "turn_idx", "role",
-                                           "text", "tool", "ts"])
-                        out["ts"] = pd.to_datetime(out["ts"],
-                                                   format="ISO8601")
-                        out["turn_idx"] = out["turn_idx"].astype("int32")
-                        if with_source:
-                            out["src_file"] = os.path.basename(path)
-                        yield out
+                        out = pd.DataFrame(rows, columns=cols)
+                        out["src_file"] = os.path.basename(path)
+                        for c, t in types.items():
+                            if t == "timestamp":
+                                out[c] = pd.to_datetime(out[c],
+                                                        format="ISO8601")
+                            elif t in widths:
+                                out[c] = out[c].astype(widths[t])
+                        yield out[list(types)]
 
-    schema = (TRANSCRIPT_SCHEMA + ", src_file string" if with_source
-              else TRANSCRIPT_SCHEMA)
     # natural binaryFile partitioning: dumps are not splittable, so at real
     # scale each multi-GB file is its own task; small test files pack
-    # together via the open-cost heuristic. (An earlier repartition("path")
-    # here shuffled every content byte for zero benefit at dump scale.)
+    # together via the open-cost heuristic
     return files.mapInPandas(parse, schema)
+
+
+def read_ufed_xml(spark: SparkSession, xml_dir: str,
+                  with_source: bool = False) -> DataFrame:
+    """UFED XML directory -> transcripts DataFrame (the S1 operator).
+
+    ``with_source=True`` appends a ``src_file`` column (dump basename) —
+    the extraction-attribution the cross-extraction intersection needs."""
+    schema = (TRANSCRIPT_SCHEMA + ", src_file string" if with_source
+              else TRANSCRIPT_SCHEMA)
+    return parse_dumps(_dump_paths(spark, xml_dir), "turns", schema)
 
 
 ATTACHMENT_SCHEMA = ("conv_id string, turn_idx int, filename string, "
@@ -510,31 +524,12 @@ ATTACHMENT_SCHEMA = ("conv_id string, turn_idx int, filename string, "
 
 def read_ufed_attachments(spark: SparkSession, xml_dir: str) -> DataFrame:
     """UFED XML directory -> raw attachment metadata rows (SURVEY S3
-    taggedFiles/header parse + J10 attachment map). Same streaming parse
-    as read_ufed_xml with the Attachment emitter; EXIF strings come out
+    taggedFiles/header parse + J10 attachment map). EXIF strings come out
     RAW — normalization (sexagesimal GPS -> decimal, EXIF datetime ->
     timestamp) happens in column expressions downstream
     (functions/exif.py), never in the Python worker."""
-    import pandas as pd
-
-    files = _dump_paths(spark, xml_dir)
-
-    cols = ["conv_id", "turn_idx", "filename", "mime", "size_bytes",
-            "exif_dt", "gps_lat", "gps_lat_ref", "gps_lon", "gps_lon_ref"]
-
-    def parse(batches):
-        for pdf in batches:
-            for path in pdf["path"]:
-                with _open_dump(path) as fh:
-                    gen = _parse_ufed_stream(fh, emit="attachments")
-                    for rows in _salvage_batches(gen, path):
-                        out = pd.DataFrame(rows, columns=cols)
-                        out["turn_idx"] = out["turn_idx"].astype("int32")
-                        out["size_bytes"] = (out["size_bytes"]
-                                             .astype("int64"))
-                        yield out
-
-    return files.mapInPandas(parse, ATTACHMENT_SCHEMA)
+    return parse_dumps(_dump_paths(spark, xml_dir), "attachments",
+                       ATTACHMENT_SCHEMA)
 
 
 MODEL_SCHEMA = ("src_file string, model_type string, model_id string, "
@@ -546,23 +541,7 @@ def read_ufed_models(spark: SparkSession, xml_dir: str) -> DataFrame:
     (K5 proper — the xml-count side of the reference's per-type
     reconciliation, parser.xml_counts_by_type in
     ingestion/scripts/cellebrite/ingestion.py:668-706, plus the generic
-    field capture its per-type writers consume). Same streamed one-task-
-    per-file parse as read_ufed_xml; rows for nested Chat content carry
-    null fields — only top-level non-Chat models are writer inputs here."""
-    import pandas as pd
-
-    files = _dump_paths(spark, xml_dir)
-
-    cols = ["model_type", "model_id", "ts", "name", "phone"]
-
-    def parse(batches):
-        for pdf in batches:
-            for path in pdf["path"]:
-                with _open_dump(path) as fh:
-                    gen = _parse_ufed_stream(fh, emit="models")
-                    for rows in _salvage_batches(gen, path):
-                        out = pd.DataFrame(rows, columns=cols)
-                        out.insert(0, "src_file", os.path.basename(path))
-                        yield out
-
-    return files.mapInPandas(parse, MODEL_SCHEMA)
+    field capture its per-type writers consume). Rows for nested Chat
+    content carry null fields — only top-level non-Chat models are writer
+    inputs here."""
+    return parse_dumps(_dump_paths(spark, xml_dir), "models", MODEL_SCHEMA)

@@ -401,21 +401,10 @@ _SESSION_SCHEMA = ("folder_name string, start_string string, "
                    "interpretation string")
 
 
-def read_wiretap_sessions(spark: SparkSession, case_dir: str,
-                          list_shards: int | None = None) -> DataFrame:
+def read_wiretap_sessions(spark: SparkSession, case_dir: str) -> DataFrame:
     """Case directory -> one row per wiretap session:
     (folder_name, time_of_call timestamp, line_id, contact_id,
      session_length int, participants, interpretation, doc_text).
-
-    ``list_shards=N`` moves the directory LISTING off the driver too: N
-    tasks each stream one ``os.scandir`` pass over the sessions root and
-    keep only the folders whose name-crc falls in their shard, parsing
-    them as they are listed. The driver never materializes (or sorts) the
-    folder-name list — O(1) driver memory at any session count — at the
-    cost of N redundant dirent sweeps, which overlap across executors.
-    Use it past ~1M sessions (the docstring bound below); result set is
-    identical to the flat path (name-crc sharding is a partition of the
-    same folders, asserted in tests/test_wiretap.py).
 
     PARALLEL UNIT = the session FOLDER (exactly the reference's
     process_wiretap_folder granularity, audio_processor.py:253-260): one
@@ -440,60 +429,25 @@ def read_wiretap_sessions(spark: SparkSession, case_dir: str,
     cols = ["folder_name", "start_string", "line_id", "contact_id",
             "session_length", "participants", "interpretation"]
 
-    if list_shards:
-        # distributed listing: one scandir STREAM per shard task, folders
-        # filtered by a deterministic name-crc (zlib.crc32, stable across
-        # processes — builtin hash() is salted) and parsed as listed, in
-        # bounded batches. Nothing folder-related ever sits on the driver.
-        n_shards = int(list_shards)
-        # range-partition, not hash: hash(shard) % n_shards collides, which
-        # can put two full scandir sweeps serially in one task while other
-        # partitions sit empty — range partitioning of the already-distinct
-        # shard ids maps each shard to exactly one task
-        sdf = (local_df(spark, [(i,) for i in range(n_shards)], "shard int")
-               .repartitionByRange(n_shards, "shard"))
+    # ONE listing of the sessions root; folder names only (a 1M-session
+    # case is ~tens of MB of names — fine to fan out). A case with no
+    # sessions yet (or no sessions/ dir at all) is an empty result, not a
+    # crash.
+    folders = (sorted(e.path for e in os.scandir(root) if e.is_dir())
+               if os.path.isdir(root) else [])
+    n_slices = min(max(len(folders) // 64, 1),
+                   spark.sparkContext.defaultParallelism * 4)
+    fdf = local_df(
+        spark, [(p,) for p in folders],
+        "folder_path string").repartition(n_slices)
 
-        def parse_shard(batches):
-            import zlib
-            for pdf in batches:
-                for shard in pdf["shard"]:
-                    if not os.path.isdir(root):
-                        continue
-                    buf: list[tuple] = []
-                    for e in os.scandir(root):
-                        if not e.is_dir():
-                            continue
-                        if zlib.crc32(e.name.encode()) % n_shards != shard:
-                            continue
-                        buf.append(parse_session_folder(e.path))
-                        if len(buf) >= 256:
-                            yield pd.DataFrame(buf, columns=cols)
-                            buf = []
-                    if buf:
-                        yield pd.DataFrame(buf, columns=cols)
+    def parse(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [parse_session_folder(fp) for fp in pdf["folder_path"]],
+                columns=cols)
 
-        rows = sdf.mapInPandas(parse_shard, _SESSION_SCHEMA)
-    else:
-        # ONE listing of the sessions root; folder names only (a 1M-session
-        # case is ~tens of MB of names — fine to fan out; past that use
-        # list_shards to shard the listing itself). A case with no sessions
-        # yet (or no sessions/ dir at all) is an empty result, not a crash.
-        folders = (sorted(e.path for e in os.scandir(root) if e.is_dir())
-                   if os.path.isdir(root) else [])
-        n_slices = min(max(len(folders) // 64, 1),
-                       spark.sparkContext.defaultParallelism * 4)
-        fdf = local_df(
-            spark, [(p,) for p in folders],
-            "folder_path string").repartition(n_slices)
-
-        def parse(batches):
-            for pdf in batches:
-                yield pd.DataFrame(
-                    [parse_session_folder(fp) for fp in pdf["folder_path"]],
-                    columns=cols)
-
-        rows = fdf.mapInPandas(parse, _SESSION_SCHEMA)
-
+    rows = fdf.mapInPandas(parse, _SESSION_SCHEMA)
     sess = rows.select(
         "folder_name",
         # "YYYY-MM-DD HH:MM:SS CST" -> timestamp (tz label is sliced off;

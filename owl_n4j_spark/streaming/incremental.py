@@ -20,6 +20,12 @@ source offsets so a restart never re-processes committed files.
 Watermarked per-conversation windowed aggregation (`thread_stats_stream`)
 covers the late/duplicate-data semantics the reference handles with
 re-ingest MERGE: late turns update their window until the watermark passes.
+
+Every job here — XML dump and wiretap session ingest, extraction, gap
+sessions, thread stats, dedup — ends in the same sink,
+``_drain_to_parquet`` (append, availableNow, checkpointed). The XML dump
+stream parses through the batch UFED readers' own loop
+(``sources.ufed_xml.parse_dumps``).
 """
 
 from __future__ import annotations
@@ -29,6 +35,22 @@ from pyspark.sql import functions as F
 
 from owl_n4j_spark.operators.extraction_vec import extract_records_stateless_vec
 from owl_n4j_spark.synth import TRANSCRIPT_SCHEMA
+
+
+def _drain_to_parquet(df: DataFrame, output_dir: str, checkpoint_dir: str,
+                      *partition_by: str) -> None:
+    """The one sink of every job here: append ``df`` to a parquet
+    directory (optionally partitioned) with ``trigger(availableNow=True)``
+    — catch up on everything the source has, then stop — and wait. The
+    checkpoint carries the source offsets (and any state store), so a
+    restart never re-emits a committed batch."""
+    (df.writeStream.format("parquet")
+     .option("path", output_dir)
+     .option("checkpointLocation", checkpoint_dir)
+     .partitionBy(*partition_by)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
 
 
 def read_transcript_stream(spark: SparkSession, input_dir: str,
@@ -44,27 +66,19 @@ def read_xml_dump_stream(spark: SparkSession, xml_dir: str,
                          max_files_per_trigger: int = 1000) -> DataFrame:
     """STREAMING XML model scan (SURVEY S1's literal reference shape —
     parser.py consumes dumps as they land): a binaryFile file-source
-    stream over the dump directory, each new .xml file parsed by the SAME
-    streaming chunked iterparse as the batch reader
-    (sources/ufed_xml._parse_ufed_stream) into the transcripts contract.
-    Checkpointed offsets mean a landed dump is parsed exactly once across
-    restarts. Only the PATH rides the stream row — the task opens its
-    dump locally so iterparse streams from disk (no 2 GB binary-column
-    cap, no whole-dump materialization; sources/ufed_xml._dump_paths).
+    stream over the dump directory, each new .xml file parsed by the
+    batch readers' own per-dump loop (sources/ufed_xml.parse_dumps) into
+    the transcripts contract. Checkpointed offsets mean a landed dump is
+    parsed exactly once across restarts. Only the PATH rides the stream
+    row — the task opens its dump locally so iterparse streams from disk
+    (no 2 GB binary-column cap, no whole-dump materialization;
+    sources/ufed_xml._dump_paths).
 
     ``max_files_per_trigger`` bounds each micro-batch, INCLUDING under
     availableNow catch-up: a 100k-dump backlog commits checkpoint
     progress every N dumps instead of running one giant all-or-nothing
     batch whose failure would re-parse everything from zero."""
-    import os
-
-    import pandas as pd
-
-    from owl_n4j_spark.sources.ufed_xml import (
-        TRANSCRIPT_SCHEMA as XML_OUT_SCHEMA,
-        _open_dump,
-        _parse_ufed_stream,
-    )
+    from owl_n4j_spark.sources.ufed_xml import parse_dumps
 
     files = (spark.readStream.format("binaryFile")
              .schema("path string, modificationTime timestamp, "
@@ -73,23 +87,7 @@ def read_xml_dump_stream(spark: SparkSession, xml_dir: str,
              .option("maxFilesPerTrigger", str(max_files_per_trigger))
              .load(xml_dir)
              .select("path"))
-
-    def parse(batches):
-        from owl_n4j_spark.sources.ufed_xml import _salvage_batches
-        for pdf in batches:
-            for path in pdf["path"]:
-                with _open_dump(path) as fh:
-                    gen = _parse_ufed_stream(fh)
-                    for rows in _salvage_batches(gen, path):
-                        out = pd.DataFrame(
-                            rows, columns=["conv_id", "turn_idx", "role",
-                                           "text", "tool", "ts"])
-                        out["ts"] = pd.to_datetime(out["ts"],
-                                                   format="ISO8601")
-                        out["turn_idx"] = out["turn_idx"].astype("int32")
-                        yield out
-
-    return files.mapInPandas(parse, XML_OUT_SCHEMA)
+    return parse_dumps(files, "turns", TRANSCRIPT_SCHEMA)
 
 
 def run_incremental_xml_ingest(
@@ -105,16 +103,9 @@ def run_incremental_xml_ingest(
     ``max_files_per_trigger``, a big backlog commits every N dumps, so a
     mid-catch-up failure loses at most one bounded batch, never the whole
     backlog."""
-    q = (
-        read_xml_dump_stream(spark, xml_dir, max_files_per_trigger)
-        .writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_parquet(
+        read_xml_dump_stream(spark, xml_dir, max_files_per_trigger),
+        output_dir, checkpoint_dir)
 
 
 def read_wiretap_stream(spark: SparkSession, case_dir: str,
@@ -194,10 +185,7 @@ def read_wiretap_stream(spark: SparkSession, case_dir: str,
             df["turn_idx"] = df["turn_idx"].astype("int32")
             yield df
 
-    from owl_n4j_spark.sources.ufed_xml import (
-        TRANSCRIPT_SCHEMA as OUT_SCHEMA,
-    )
-    return files.mapInPandas(parse, OUT_SCHEMA)
+    return files.mapInPandas(parse, TRANSCRIPT_SCHEMA)
 
 
 def run_incremental_wiretap_ingest(
@@ -212,16 +200,9 @@ def run_incremental_wiretap_ingest(
     run_incremental_xml_ingest). The .sri marker is the offset-tracked
     unit, so a restart never re-parses a committed session, and
     ``max_files_per_trigger`` bounds each catch-up batch."""
-    q = (
-        read_wiretap_stream(spark, case_dir, max_files_per_trigger)
-        .writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_parquet(
+        read_wiretap_stream(spark, case_dir, max_files_per_trigger),
+        output_dir, checkpoint_dir)
 
 
 def run_incremental_extraction(
@@ -239,16 +220,7 @@ def run_incremental_extraction(
     """
     records = extract_records_stateless_vec(
         read_transcript_stream(spark, input_dir), gazetteer)
-    q = (
-        records.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("kind")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_parquet(records, output_dir, checkpoint_dir, "kind")
 
 
 SESSION_GAP_S = 1800
@@ -329,16 +301,7 @@ def session_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    q = (
-        out.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_parquet(out, output_dir, checkpoint_dir)
 
 
 def thread_stats_stream(
@@ -366,16 +329,7 @@ def thread_stats_stream(
                 F.col("window.end").alias("win_end"),
                 "conv_id", "n_turns", "n_speakers", "first_ts", "last_ts")
     )
-    q = (
-        agg.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_parquet(agg, output_dir, checkpoint_dir)
 
 
 def dedup_stream(
@@ -400,13 +354,4 @@ def dedup_stream(
         tr.withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
     )
-    q = (
-        deduped.writeStream
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_parquet(deduped, output_dir, checkpoint_dir)

@@ -25,7 +25,8 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_CONVS = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
 N_LO = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -143,8 +144,9 @@ def main():
     # rewrite once destroyed 300+ lines of accumulated runs. The fresh
     # report goes to its own file; merge the new run's ROW into the
     # BASELINE.md table by hand (with its loadavg context).
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/scaling_latest.md", "w") as f:
+    os.makedirs(os.path.join(ROOT, "BENCH"), exist_ok=True)
+    with open(os.path.join(ROOT, "BENCH", "scaling_latest.md"),
+              "w") as f:
         f.write(f"""# BENCH — throughput + two-parallelism scaling evidence
 
 North-rule metric: triple-extraction throughput (turns/sec) and scaling

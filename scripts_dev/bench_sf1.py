@@ -23,7 +23,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TILES = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 SRC = "/root/testdata/sf0.1"

@@ -5,10 +5,11 @@ compare row count, column names, and order-insensitive values.
 Usage: python scripts_dev/check_oracles.py [sf_dir] [only_query ...]
 """
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np

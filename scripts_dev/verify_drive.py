@@ -1,9 +1,10 @@
 """Drive the engine through its public package boundary, as a user would."""
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from owl_n4j_spark.session import get_spark
 from owl_n4j_spark.pipeline import run_pipeline

@@ -2,6 +2,7 @@
 DuckDB exactly at sf0.001 (row count, column names, order-insensitive
 values). This is the same comparison the driver runs at sf0.01."""
 
+import os
 import sys
 from datetime import datetime
 
@@ -9,7 +10,7 @@ import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from scripts_dev.check_oracles import TABLES, normalize

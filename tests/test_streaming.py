@@ -81,6 +81,14 @@ def test_streaming_extraction_equals_batch(spark, stream_dirs, corpus_batches,
     assert spark.read.parquet(stream_dirs["out"]).count() == got.count()
 
 
+def test_streaming_extraction_writes_kind_partitions(stream_dirs,
+                                                    drained_stream):
+    """The extraction sink lays its records out by ``kind``."""
+    parts = [p for p in os.listdir(stream_dirs["out"])
+             if not p.startswith(("_", "."))]
+    assert parts and all(p.startswith("kind=") for p in parts)
+
+
 def test_watermarked_thread_stats(spark, stream_dirs, corpus_batches,
                                   drained_stream):
     corpus, b1, b2 = corpus_batches

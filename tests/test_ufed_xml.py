@@ -1,15 +1,23 @@
 """UFED-XML adapter (SURVEY S1): round-trip exactness + parser robustness."""
 
 import os
+import shutil
 import textwrap
 
+import pytest
 from pyspark.sql import functions as F
 
 from owl_n4j_spark.sources.events_transcripts import transcripts_from_events
 from owl_n4j_spark.sources.ufed_xml import (
     XML_NS,
+    read_ufed_attachments,
+    read_ufed_models,
     read_ufed_xml,
     write_ufed_xml,
+)
+from owl_n4j_spark.streaming.incremental import (
+    read_xml_dump_stream,
+    run_incremental_xml_ingest,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -167,22 +175,87 @@ def test_streaming_xml_ingest_incremental_and_restart_safe(spark, tmp_path):
     assert got.select(*cols).exceptAll(want.select(*cols)).isEmpty()
 
 
-def test_malformed_dump_salvaged_not_fatal(spark, tmp_path):
+def _stream_ingest(spark, xml_dir):
+    """run_incremental_xml_ingest drained into a sibling directory, read
+    back as a batch frame."""
+    out, ck = xml_dir + "_out", xml_dir + "_ck"
+    run_incremental_xml_ingest(spark, xml_dir, out, ck)
+    return spark.read.parquet(out)
+
+
+UFED_READERS = {
+    "read_ufed_xml": lambda spark, d: read_ufed_xml(spark, d,
+                                                    with_source=True),
+    "read_ufed_attachments": read_ufed_attachments,
+    "read_ufed_models": read_ufed_models,
+    "run_incremental_xml_ingest": _stream_ingest,
+}
+
+
+@pytest.fixture(scope="module")
+def truncated_case(spark, tmp_path_factory):
+    """Three dump directories over one 4-dump rendering: ``full`` (as
+    written), ``bad`` (the first dump cut in half, mid-element) and
+    ``others`` (the three untouched dumps only)."""
+    root = tmp_path_factory.mktemp("ufed_trunc")
+    full = root / "full"
+    write_ufed_xml(spark, SF, str(full), n_files=4)
+    dumps = sorted(p for p in os.listdir(full) if p.endswith(".xml"))
+    for name in ("bad", "others"):
+        (root / name).mkdir()
+    for p in dumps:
+        data = (full / p).read_bytes()
+        if p == dumps[0]:
+            (root / "bad" / p).write_bytes(data[: len(data) // 2])
+        else:
+            (root / "bad" / p).write_bytes(data)
+            (root / "others" / p).write_bytes(data)
+    return root
+
+
+@pytest.mark.parametrize("reader", list(UFED_READERS))
+def test_malformed_dump_salvaged_not_fatal(spark, truncated_case, reader):
     # a truncated dump must not fail the job: its complete batches are
     # kept, its remainder skipped, and every OTHER dump parses fully
-    xml_dir = tmp_path / "xmlbad"
-    write_ufed_xml(spark, SF, str(xml_dir), n_files=4)
-    dumps = sorted(p for p in os.listdir(xml_dir) if p.endswith(".xml"))
-    victim = xml_dir / dumps[0]
-    data = victim.read_bytes()
-    victim.write_bytes(data[: len(data) // 2])   # truncate mid-element
-    got = read_ufed_xml(spark, str(xml_dir))
-    want = transcripts_from_events(spark, SF)
-    n_got, n_want = got.count(), want.count()
-    assert 0 < n_got < n_want
-    # every parsed row is a true row of the original corpus (no corruption)
-    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    assert got.select(*cols).exceptAll(want.select(*cols)).isEmpty()
+    read = UFED_READERS[reader]
+    # each parse gets its own copy so stream outputs never share a root
+    parsed = {}
+    for name in ("full", "bad", "others"):
+        d = truncated_case / f"{name}_{reader}"
+        shutil.copytree(truncated_case / name, d)
+        parsed[name] = read(spark, str(d))
+    got, full, others = parsed["bad"], parsed["full"], parsed["others"]
+    n_got, n_full = got.count(), full.count()
+    assert 0 < n_got < n_full
+    # every parsed row is a true row of the full parse (no corruption)
+    assert got.exceptAll(full).isEmpty()
+    # ... and every row of the untouched dumps survives
+    assert others.count() > 0
+    assert others.exceptAll(got).isEmpty()
+
+
+@pytest.mark.parametrize("read, ddl", [
+    (read_ufed_xml,
+     "struct<conv_id:string,turn_idx:int,role:string,text:string,"
+     "tool:string,ts:timestamp>"),
+    (lambda spark, d: read_ufed_xml(spark, d, with_source=True),
+     "struct<conv_id:string,turn_idx:int,role:string,text:string,"
+     "tool:string,ts:timestamp,src_file:string>"),
+    (read_ufed_attachments,
+     "struct<conv_id:string,turn_idx:int,filename:string,mime:string,"
+     "size_bytes:bigint,exif_dt:string,gps_lat:string,gps_lat_ref:string,"
+     "gps_lon:string,gps_lon_ref:string>"),
+    (read_ufed_models,
+     "struct<src_file:string,model_type:string,model_id:string,ts:string,"
+     "name:string,phone:string>"),
+    (read_xml_dump_stream,
+     "struct<conv_id:string,turn_idx:int,role:string,text:string,"
+     "tool:string,ts:timestamp>"),
+], ids=["read_ufed_xml", "read_ufed_xml_with_source", "read_ufed_attachments",
+        "read_ufed_models", "read_xml_dump_stream"])
+def test_reader_schema_pinned(spark, truncated_case, read, ddl):
+    assert read(spark, str(truncated_case / "full")).schema.simpleString() \
+        == ddl
 
 
 def test_bounded_trigger_commits_backlog_in_batches(spark, tmp_path):

@@ -369,17 +369,3 @@ def test_rtf_uc_scoping_and_rich_fixture_parity():
         assert rich == plain
     # rich fixtures exist at every sf (eid % 7): the oracle parity suite
     # (scripts_dev/check_oracles.py q_wiretap_ingest) therefore covers them
-
-
-def test_sharded_listing_equals_flat(spark):
-    """list_shards=N (the >1M-session listing shard) returns the exact
-    same session multiset as the driver-listed flat path."""
-    from owl_n4j_spark.plans.kg_analytics import ensure_wiretap
-    from owl_n4j_spark.sources.wiretap import read_wiretap_sessions
-
-    case = ensure_wiretap(spark, SF)
-    flat = read_wiretap_sessions(spark, case)
-    sharded = read_wiretap_sessions(spark, case, list_shards=5)
-    assert sharded.count() == flat.count() > 0
-    assert sharded.exceptAll(flat).unionAll(
-        flat.exceptAll(sharded)).count() == 0
