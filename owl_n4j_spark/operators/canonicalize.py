@@ -8,26 +8,29 @@ serial union-find executed against the database.
 
 Spark-first re-expression: build the same-as edge set once (exact dict hits,
 confirmed fuzzy pairs, extracted SAME_AS evidence, shared canonical phone is
-implicit in key equality) and run **iterative hash-min connected components**
-— each vertex repeatedly adopts the minimum label in its neighbourhood until
-fixpoint. Labels are priority-prefixed ("0|phone-..." < "1|email-..." <
-"3|name") so the winning label of a component IS the canonical key elected
-by the reference's key cascade priority (phone > email > app-id > name).
+implicit in key equality) and run **partition-local union-find rounds**
+(the local round of BTS, ICDE 2024) in Python workers: an edge set that
+fits one partition resolves in ONE round, whatever its diameter. Labels
+are priority-prefixed ("0|phone-..." < "2|email-..." < "6|name") so the
+winning label of a component IS the canonical key elected by the
+reference's key cascade priority (phone > email > app-id > name).
 
-Skew: the documented hub entities (70k+ relationships — BASELINE.md) make
-the per-destination min-aggregation skewed. The aggregation is algebraic,
-so Spark's hash aggregate bounds it by construction: map-side partial
-aggregation emits one row per destination per map task, so a hub's
-reduce-side fan-in is O(map tasks) — plus AQE skew-join splitting on the
-label join.
+Skew: a hub entity (70k+ relationships — BASELINE.md) has all its edges in
+its own partition; the cross-partition minimum is a map-side combined
+aggregation.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from owl_n4j_spark.functions.keys import key_priority_col
+
+# Edge rows one union-find partition holds; each edge is placed at both of
+# its endpoints, so up to _UF_ROWS / 2 edges resolve in one round.
+_UF_ROWS = 1_000_000
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -55,6 +58,28 @@ def checkpoint_count(df: DataFrame, counted) -> tuple[DataFrame, int]:
     return df, int(obs.get["n"])
 
 
+def _local_roots(batches):
+    """mapInPandas body: union-find over one partition's labelled edges
+    (ls, ld), each tree rooted at its minimum label; emits (x, p) for every
+    vertex x, p the minimum label of x's component in this partition."""
+    parent = {}
+
+    def root(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for b in batches:
+        for a, c in zip(b["ls"], b["ld"]):
+            ra, rc = root(a), root(c)
+            if ra != rc:
+                parent[max(ra, rc)] = min(ra, rc)
+    if parent:
+        yield pd.DataFrame({"x": list(parent),
+                            "p": [root(x) for x in parent]})
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
@@ -62,76 +87,76 @@ def connected_components(
 ) -> DataFrame:
     """edges(src,dst) -> DataFrame(member_key, canonical_key).
 
-    Hash-min label propagation with priority-prefixed labels, map-side
-    partial aggregation, and lineage truncation via localCheckpoint.
-    Converges in O(diameter) rounds; alias graphs are near-star-shaped
-    (diameter <= ~4), so this is a handful of cheap shuffles. Raises
-    RuntimeError if labels still change after ``max_iter`` rounds.
+    Union-find rounds over priority-prefixed labels. A round over n edges
+    places each edge in the partition ``hash(label) % k`` of each endpoint,
+    k = ceil(2n / _UF_ROWS), and maps every vertex x to p(x), the minimum
+    label of its local components. With k = 1 that round is final; else
+    the edges (r, p(x)), r != p(x), cross into the next round and labels
+    compose through p. Raises RuntimeError if edges still cross after
+    ``max_iter`` rounds.
 
     ``canon_keys`` (single column ``key``): keys that are dictionary
     canonicals — within the same cascade-priority class they win the
     election over incidental aliases (e.g. "emerald-imports-ltd" beats the
     short form "emerald-imports").
     """
-    sym, n_sym = checkpoint_count(symmetrize(edges), F.lit(True))
-    # Empty edge set (common: a corpus whose extraction emitted no SAME_AS
-    # evidence) — every vertex is its own component and the label machinery
-    # (labels0 checkpoint + one no-op round, 2 scheduled jobs) would
-    # compute nothing. The row count is observed on the checkpoint's own
-    # job, so the short-circuit costs no job at all.
-    if n_sym == 0:
-        return sym.select(F.col("a").alias("member_key"),
-                          F.col("b").alias("canonical_key"))
-    verts = sym.select(F.col("a").alias("v")).dropDuplicates(["v"])
+    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
     if canon_keys is not None:
-        verts = verts.join(
-            F.broadcast(canon_keys.select(F.col("key").alias("v"))
-                        .withColumn("__is_canon", F.lit(0))),
-            on="v", how="left")
-    else:
-        verts = verts.withColumn("__is_canon", F.lit(None).cast("int"))
-    prio = key_priority_col(F.col("v")) * 2 + F.coalesce(F.col("__is_canon"), F.lit(1))
-    labels = (
-        verts.withColumn("comp", F.concat(prio.cast("string"), F.lit("|"), F.col("v")))
-        .drop("__is_canon")
-        .localCheckpoint(eager=True)
-    )
+        for c in ("src", "dst"):
+            e = e.join(F.broadcast(canon_keys.select(
+                F.col("key").alias(c), F.lit(0).alias(f"{c}_bit"))),
+                on=c, how="left")
 
-    for it in range(max_iter):
-        # Neighbour minimum: ONE hash aggregation. min() is algebraic, so
-        # Spark's hash aggregate partially aggregates map-side — every map
-        # task emits at most one row per destination, which already bounds
-        # a hub's reduce-side fan-in at O(map tasks). The earlier explicit
-        # (b, salt) pre-aggregation re-implemented exactly that bound at
-        # the price of a SECOND full shuffle per round — removed (guide
-        # §2.3/§2.5: partial aggregation IS the skew handling for
-        # algebraic aggs; salting is for non-combinable shapes).
-        nbr = (
-            sym.join(labels.withColumnRenamed("v", "a"), on="a")
-            .groupBy("b").agg(F.min("comp").alias("nbr_comp"))
-            .withColumnRenamed("b", "v")
-        )
-        new_labels = (
-            labels.join(nbr, on="v", how="left")
-            .select("v", F.least(F.col("comp"), F.coalesce(F.col("nbr_comp"),
-                                                           F.col("comp"))).alias("comp"),
-                    (F.col("nbr_comp") < F.col("comp")).alias("changed"))
-        )
-        # Convergence: the changed-label count is observed on the round's
-        # own checkpoint job — no separate poll job per round.
-        new_labels, n_changed = checkpoint_count(new_labels, F.col("changed"))
-        labels = new_labels.drop("changed")
-        if n_changed == 0:
+    def label(c):
+        bit = F.col(f"{c}_bit") if canon_keys is not None else F.lit(None)
+        prio = key_priority_col(F.col(c)) * 2 + F.coalesce(bit, F.lit(1))
+        return F.concat(prio.cast("string"), F.lit("|"), F.col(c))
+
+    e, n = checkpoint_count(
+        e.select(label("src").alias("ls"), label("dst").alias("ld")),
+        F.lit(True))
+
+    def unlabel(c):
+        # the prefix is digits only: strip at the FIRST '|', keys may hold '|'
+        return F.expr(f"substring({c}, instr({c}, '|') + 1)")
+
+    # empty edge set (common: no SAME_AS evidence): no further job
+    if n == 0:
+        return e.select(unlabel("ls").alias("member_key"),
+                        unlabel("ld").alias("canonical_key"))
+
+    links = []  # per round: x -> p(x), on that round's vertices
+    for _ in range(max_iter):
+        k = -(-2 * n // _UF_ROWS)
+        if k == 1:
+            links.append(e.coalesce(1).mapInPandas(_local_roots,
+                                                   "x string, p string"))
             break
+        roots = (
+            e.select(F.explode(F.array("ls", "ld")).alias("at"), "ls", "ld")
+            .repartition(k, "at").select("ls", "ld")
+            .mapInPandas(_local_roots, "x string, p string")
+            .groupBy("x").agg(F.min("p").alias("p"),
+                              F.collect_set("p").alias("rs"))
+            .select("x", "p", F.explode("rs").alias("r"))
+        )
+        roots, n = checkpoint_count(roots, F.col("r") != F.col("p"))
+        links.append(roots.filter("r = p").select("x", "p"))
+        if n == 0:
+            break
+        e = roots.filter("r != p").selectExpr("r AS ls", "p AS ld")
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds: "
-            f"{n_changed} labels still changing")
+            f"{n} edges still crossing partitions")
 
-    return labels.select(
-        F.col("v").alias("member_key"),
-        F.substring_index(F.col("comp"), "|", -1).alias("canonical_key"),
-    )
+    labels = links[0]
+    for link in links[1:]:
+        labels = (labels.join(link.withColumnsRenamed({"p": "q", "x": "p"}),
+                              on="p", how="left")
+                  .select("x", F.coalesce("q", "p").alias("p")))
+    return labels.select(unlabel("x").alias("member_key"),
+                         unlabel("p").alias("canonical_key"))
 
 
 def cross_device_projection(mapping: DataFrame) -> DataFrame:

@@ -310,10 +310,10 @@ def add_thread_mentions(recs: DataFrame) -> DataFrame:
 
     ``recs`` feeds both the pass-through leg and the thread aggregation of
     the union below. A plain union would run the whole record plan — the
-    Python extractor included — once per leg, so ``recs`` is read through a
-    lazy localCheckpoint: it materializes on the first action (inside the
-    stage's own job, no extra barrier) and both legs scan the stored
-    rows, so the extractor runs once per pass."""
+    Python extractor included — once per leg, so both legs read ``recs``
+    through a lazy localCheckpoint and the extractor runs once per pass.
+    Under AQE, defining it runs any shuffle-map job of the record plan at
+    once; only the tail after the last shuffle waits for the first action."""
     recs = recs.localCheckpoint(eager=False)
     sent = recs.filter((F.col("kind") == "triple") & (F.col("pred") == "SENT_MESSAGE"))
     threads = (

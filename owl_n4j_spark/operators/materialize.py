@@ -40,43 +40,21 @@ def build_nodes(mentions: DataFrame, final_mapping: DataFrame,
                 case_id: str) -> DataFrame:
     """mentions (canonical mention_key) -> one row per (case_id, key).
 
-    - type: most frequent mention_type (deterministic tie-break)
-    - name: most frequent real-name surface; falls back to the key
-      (alias rollup + best-primary election — ref neo4j_writer.py:3049-3094)
+    - type: most frequent mention_type, lowest on a tie; untyped (NULL)
+      mentions count as a type that sorts first and elects "Entity" (so
+      does an empty-string type)
+    - name: most frequent real-name surface, lowest on a tie; falls back
+      to the key (alias rollup + best-primary election — ref
+      neo4j_writer.py:3049-3094)
     - name_aliases: every distinct real-name surface (A4)
     - phone_numbers: every phone-keyed member of the identity component
       (ref: phone_numbers list prop, neo4j_writer.py:857-861)
     - date/amount: first non-null observation (deterministic min)
+
+    One aggregation per key; ``mode`` and ``collect_set`` combine map-side.
     """
     m = mentions.filter(F.col("mention_key").isNotNull())
-
-    # type election: argmax(count) with min-type tie-break, expressed as
-    # min(struct(-cnt, type)) — algebraic, map-side combinable (no window
-    # sort; at scale a window here is a full sort of every mention group,
-    # the agg is two partial-combine shuffles)
-    types = (
-        m.groupBy("mention_key", "mention_type").agg(F.count("*").alias("cnt"))
-        .groupBy("mention_key")
-        .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
-                            F.col("mention_type").alias("v"))).alias("e"))
-        .select("mention_key", F.col("e.v").alias("type"))
-    )
-
-    # primary-name election among real-name surfaces — same argmax shape
-    name_counts = (
-        m.filter(is_real_name_col(F.col("surface")))
-        .groupBy("mention_key", "surface").agg(F.count("*").alias("cnt"))
-    )
-    primary = (
-        name_counts.groupBy("mention_key")
-        .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
-                            F.col("surface").alias("v"))).alias("e"))
-        .select("mention_key", F.col("e.v").alias("name"))
-    )
-    aliases = (
-        name_counts.groupBy("mention_key")
-        .agg(F.sort_array(F.collect_set("surface")).alias("name_aliases"))
-    )
+    real = F.when(is_real_name_col(F.col("surface")), F.col("surface"))
 
     # phone_numbers from the identity component membership
     phones = (
@@ -89,6 +67,11 @@ def build_nodes(mentions: DataFrame, final_mapping: DataFrame,
     )
 
     attrs = m.groupBy("mention_key").agg(
+        # mode() skips NULLs: '' stands in for an untyped mention
+        F.nullif(F.mode(F.coalesce(F.col("mention_type"), F.lit("")), True),
+                 F.lit("")).alias("type"),
+        F.mode(real, True).alias("name"),
+        F.sort_array(F.collect_set(real)).alias("name_aliases"),
         F.min("date").alias("date_str"),
         F.min("ts").alias("ts"),
         F.min("amount").alias("amount_str"),
@@ -97,10 +80,7 @@ def build_nodes(mentions: DataFrame, final_mapping: DataFrame,
 
     key = F.col("mention_key")
     return (
-        attrs.join(types, "mention_key", "left")
-        .join(primary, "mention_key", "left")
-        .join(aliases, "mention_key", "left")
-        .join(phones, "mention_key", "left")
+        attrs.join(phones, "mention_key", "left")
         .select(
             F.sha1(F.concat_ws("|", F.lit(case_id), key)).alias("node_id"),
             key.alias("key"),

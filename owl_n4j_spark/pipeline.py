@@ -255,27 +255,22 @@ def run_pipeline(
         takes its total and part rows from that scan, with no Spark job,
         and records zero duration.
 
-        Without a warehouse the stage output is localCheckpoint-ed: this both
-        computes the stage exactly once AND truncates the logical plan at the
-        stage boundary. The truncation is load-bearing — each stage's plan
-        references the previous stages several times (remaps, semi-joins), so
-        without a leaf node at every boundary the composed logical plan grows
-        exponentially and Catalyst analysis time dominates execution (measured
-        ~10s planning per action at sf0.01). The warehouse path gets the same
-        truncation for free from the parquet round-trip.
+        Without a warehouse the stage output is localCheckpoint-ed: the stage
+        is computed once and the logical plan is truncated at the stage
+        boundary. The truncation is load-bearing: each stage's plan reads the
+        previous stages several times (remaps, semi-joins), and without a
+        leaf at every boundary Catalyst analysis grows exponentially
+        (measured ~10s planning per action at sf0.01). The warehouse path
+        gets the same truncation from the parquet round-trip.
 
-        The checkpoint is LAZY (eager=False): it still materializes exactly
-        once (on the first action that touches it) and truncates lineage the
-        same way, but consecutive stages fuse into one scheduled job instead
-        of paying one barrier job per stage — the per-job fixed cost (~0.3 s
-        each on local[32]) was the dominant pipeline cost at bench scale,
-        and at cluster scale fewer barriers only helps (guide §1.2: remove
-        passes). Stages with driver-side loops between them (the CC
-        fixpoint) materialize at their own actions regardless. An
-        Observation on a lazy checkpoint resolves when the checkpoint is
-        DEFINED, before its rows flow, so batch stages are counted by the
-        one action after the pass, and write stage totals only, each
-        spanning the whole pass (its stages fuse into one job)."""
+        The checkpoint is LAZY (eager=False): its rows are stored by the
+        first action that reads them, which saves the stage's own result
+        job. It does not fuse stages into one job: under AQE, defining it
+        runs every shuffle-map job of the stage at once and defers only the
+        tail after the last shuffle. An Observation on a lazy checkpoint
+        resolves when it is DEFINED, before its rows flow, so batch stages
+        are counted by the one action after the pass, and write stage
+        totals only, each spanning the whole pass."""
         nonlocal resume
         if warehouse is None:
             uncounted[name] = df_fn().localCheckpoint(eager=False)
@@ -414,8 +409,8 @@ def run_pipeline(
     # back-fill executors freed by A's tail and vice versa). Resume
     # atomicity lives in staged()'s lock; chain A resuming t06 while
     # chain B recomputes t05 is sound because t06 derives only from
-    # t03/t04 (which resumed). Without a warehouse the stages are lazy
-    # plans — nothing executes here — so they are built sequentially.
+    # t03/t04 (which resumed). Without a warehouse only the stages'
+    # shuffle-map jobs run here (see staged()), so they are built in turn.
     def _chain_mentions_nodes(chain=None):
         m = staged("t04_mentions",
                    lambda: remap_keys(mentions_raw, final_mapping,

@@ -549,7 +549,7 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash-LSH pair graph — the fuzzy-dedup grouping step (pair pruning
     alone misses transitivity: A~B and B~C must collapse to ONE cluster
     even when A~C was never a candidate pair). REUSES the KG
-    canonicalization engine's hash-min CC
+    canonicalization engine's union-find CC
     (operators/canonicalize.py) on doc-id vertices, the same
     one-engine-many-graphs rule as q_graph_cc; at 100 TB the pair graph is
     orders of magnitude smaller than the corpus, and CC on it is the

@@ -53,8 +53,8 @@ def test_aqe_skew_join_splits(spark):
     """AQE skew handling (SURVEY §4 / north rule): a join where 90% of the
     left side carries ONE key must still complete with correct results, and
     AQE must mark the sort-merge join skew-aware. This is the query-level
-    complement to the map-side partial aggregation inside
-    connected_components."""
+    complement to the map-side partial aggregations of the node build and
+    the multi-partition connected_components rounds."""
     from pyspark.sql import functions as F
 
     n = 400_000

@@ -185,8 +185,8 @@ def test_betweenness_jobs_per_bfs_level(spark):
 def test_cc_hub_skew(spark):
     """Canonicalization CC under extreme hub skew (the documented 70k-rel
     contact): a star with 20,000 leaves must resolve to ONE component whose
-    canonical is the priority-preferred key, through the map-side combined
-    hash-min aggregation."""
+    canonical is the priority-preferred key, in the hub's one union-find
+    partition."""
     from pyspark.sql import functions as F
     from owl_n4j_spark.operators.canonicalize import connected_components
 
@@ -199,22 +199,21 @@ def test_cc_hub_skew(spark):
     assert comps.count() == 20_001
 
 
-def test_cc_raises_at_round_cap(spark):
-    """Hash-min CC moves the minimum label one hop per round: an 80-node
-    path cannot converge within the default 25 rounds (55 labels are
-    still changing) and must raise instead of returning 55 components; a
-    20-node path converges to one component."""
+def test_cc_raises_at_round_cap(spark, monkeypatch):
+    """A path spread over many union-find partitions (``_UF_ROWS`` patched
+    low) needs more than one round: capped at one, connected_components
+    must raise, naming the rounds and the edges still crossing, instead of
+    returning a split component; uncapped it converges to one."""
     import pytest
-    from owl_n4j_spark.operators.canonicalize import connected_components
+    from owl_n4j_spark.operators import canonicalize
 
-    def path(n):
-        return _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}")
-                              for i in range(n - 1)])
-
-    with pytest.raises(RuntimeError, match="in 25 rounds: 55 labels"):
-        connected_components(path(80))
-    comps = connected_components(path(20))
-    assert comps.count() == 20
+    monkeypatch.setattr(canonicalize, "_UF_ROWS", 20)
+    path = _edges(spark, [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(79)])
+    with pytest.raises(RuntimeError,
+                       match=r"in 1 rounds: [1-9]\d* edges still crossing"):
+        canonicalize.connected_components(path, max_iter=1)
+    comps = canonicalize.connected_components(path)
+    assert comps.count() == 80
     assert comps.select("canonical_key").distinct().count() == 1
 
 
