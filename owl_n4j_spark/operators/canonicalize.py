@@ -28,8 +28,9 @@ from pyspark.sql import functions as F
 
 from owl_n4j_spark.functions.keys import key_priority_col
 
-# Edge rows one union-find partition holds; each edge is placed at both of
-# its endpoints, so up to _UF_ROWS / 2 edges resolve in one round.
+# Edge rows per union-find partition on average; a vertex's whole degree
+# lands in its own partition, so a hub can exceed it. Measured cost per
+# partition and the sf1 sweep that set it: BENCH/BASELINE.md.
 _UF_ROWS = 1_000_000
 
 

@@ -87,8 +87,7 @@ def build_nodes(mentions: DataFrame, final_mapping: DataFrame,
             F.coalesce(F.col("type"), F.lit("Entity")).alias("type"),
             F.coalesce(F.col("name"), key).alias("name"),
             F.lit(case_id).alias("case_id"),
-            F.coalesce(F.col("name_aliases"), F.array().cast("array<string>"))
-             .alias("name_aliases"),
+            F.col("name_aliases"),
             F.coalesce(F.col("phone_numbers"), F.array().cast("array<string>"))
              .alias("phone_numbers"),
             F.to_date("date_str").alias("date"),
