@@ -1,8 +1,6 @@
 from owl_n4j_spark.functions.keys import (  # noqa: F401
     normalise_key,
-    normalise_key_col,
     normalise_phone,
     person_key,
-    person_key_udf,
     phone_person_key,
 )

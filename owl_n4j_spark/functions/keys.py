@@ -10,9 +10,9 @@ key cascade:
 - ``person_key`` cascade   — /root/reference/ingestion/scripts/cellebrite/neo4j_writer.py:144-208
   priority: WhatsApp/JID -> phone -> email -> app id -> name
 
-Everything is pure Python (used by the deterministic synth generator and by
-Arrow-batched pandas UDFs) plus a pure-column-expression variant of
-``normalise_key`` so the hot path stays inside whole-stage codegen.
+Everything is pure Python (used by the deterministic synth generator, the
+extractors and the Arrow-batched phone UDF) plus column expressions for
+the key-priority class and the phone display format.
 """
 
 from __future__ import annotations
@@ -45,17 +45,6 @@ def normalise_key(raw: str | None) -> str:
     key = _SPECIAL_RE.sub("", key)
     key = _HYPHENS_RE.sub("-", key)
     return key.strip("-")
-
-
-def normalise_key_col(col: Column) -> Column:
-    """``normalise_key`` as a pure column expression (no UDF — stays inside
-    whole-stage codegen)."""
-    c = F.lower(F.trim(col))
-    c = F.regexp_replace(c, r"[\s_]+", "-")
-    c = F.regexp_replace(c, r"[^a-z0-9\-]", "")
-    c = F.regexp_replace(c, r"-+", "-")
-    c = F.regexp_replace(c, r"^-|-$", "")
-    return F.coalesce(c, F.lit(""))
 
 
 # ---------------------------------------------------------------------------
@@ -237,25 +226,8 @@ def key_priority_col(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow-batched UDFs (the only places the cascade crosses into Python)
+# Arrow-batched UDF (phone canonicalisation in a Python worker)
 # ---------------------------------------------------------------------------
-
-
-@pandas_udf(StringType())
-def person_key_udf(
-    identifier: pd.Series, name: pd.Series, source_app: pd.Series
-) -> pd.Series:
-    """Vectorized person-key cascade. lru_cache makes repeated identifiers
-    (hub entities appear in thousands of turns) near-free per batch."""
-    return pd.Series(
-        [
-            person_key(i if isinstance(i, str) else None,
-                       n if isinstance(n, str) else None,
-                       a if isinstance(a, str) else None)
-            for i, n, a in zip(identifier, name, source_app)
-        ],
-        dtype="object",
-    )
 
 
 @pandas_udf(StringType())

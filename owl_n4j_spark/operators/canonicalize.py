@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from owl_n4j_spark.functions.keys import key_priority_col
+from owl_n4j_spark.operators.linking import remap_keys
 
 # Edge rows per union-find partition on average; a vertex's whole degree
 # lands in its own partition, so a hub can exceed it. Measured cost per
@@ -197,15 +198,9 @@ def build_sameas_edges(
     mapping:        (raw_key, canonical_key, method) from linking.
     sameas_records: extraction records with kind='sameas' (raw keys).
     """
-    m = mapping.select("raw_key", "canonical_key")
-    e = sameas_records.select(F.col("subj_key").alias("src"),
-                              F.col("obj_key").alias("dst"))
-    for c in ("src", "dst"):
-        mc = m.select(F.col("raw_key").alias(c),
-                      F.col("canonical_key").alias(f"__c_{c}"))
-        e = (e.join(F.broadcast(mc), on=c, how="left")
-             .withColumn(c, F.coalesce(F.col(f"__c_{c}"), F.col(c)))
-             .drop(f"__c_{c}"))
+    e = remap_keys(sameas_records.select(F.col("subj_key").alias("src"),
+                                         F.col("obj_key").alias("dst")),
+                   mapping, ["src", "dst"])
     return e.filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
         & (F.col("src") != F.col("dst"))

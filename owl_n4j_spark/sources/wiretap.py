@@ -10,15 +10,13 @@ a Whisper call the SURVEY scopes out of the engine core (S5 stub); the
 folder PARSE + composition is pure deterministic work and lives here.
 
 Spark-first:
-- one recursive ``binaryFile`` scan over the case's sessions tree; the
-  per-file parse (ini-style .sri lines, a destination-aware RTF stripper)
-  runs in ONE Arrow ``mapInPandas`` emitting raw field strings;
+- one listing of the case's sessions root fans the folders out to
+  executors; the per-folder parse (ini-style .sri lines, a
+  destination-aware RTF stripper, the *.syn.rtf-preferred election) runs
+  in ONE Arrow ``mapInPandas`` emitting raw field strings;
 - normalization (timestamp parse, int casts) happens in column
-  expressions, never in the Python worker;
-- per-session assembly is two O(sessions) aggregations on the folder key
-  (metadata rows only — audio bytes are never shuffled), with the
-  reference's *.syn.rtf-preferred rule expressed as ``max_by`` on a
-  priority column;
+  expressions, never in the Python worker (``parse_sessions``, shared by
+  the batch reader and the landing-folder stream);
 - the composed session rows feed the SAME transcripts contract as every
   other source, so wiretaps flow through the one
   normalize → extract → link → materialize pipeline.
@@ -133,28 +131,21 @@ def rtf_to_text(s: str) -> str:
 _PARTICIPANTS = re.compile(r"PARTICIPANTS:\s*(.+?)(?:\n|$)", re.I)
 _PART_SPLIT = re.compile(r"\s+(?:AND|AKA)\s+|\s*,\s*", re.I)
 
-# The ONE synopsis rule, shared by the batch column expression
-# (regexp_extract) and the streaming Python path (synopsis_of): the claim
+# The ONE synopsis rule, applied by ``transcripts_from_sessions`` through
+# regexp_extract for the batch and streaming readers alike: the claim
 # line is a line STARTING with "SYNOPSIS: ", never a mid-line mention,
 # and the first (leftmost) such line wins. Deliberately NO (?m)^ and NO
 # dot: Java counts \r, NEL (U+0085) and the unicode line/paragraph
 # separators (U+2028/U+2029) as line terminators for both, while Python
-# counts only \n — so the multiline idiom extracts DIFFERENT claims from
-# the same CRLF/NEL-bearing string depending on which engine runs it
-# (caught by the adversarial cross-engine test). Explicit terminator
-# classes + a string-start alternative parse identically in both engines
-# on every input, reachable or not. The \uXXXX escapes stay literal in
-# this raw string — both re and java.util.regex resolve them in-pattern.
+# counts only \n — so the multiline idiom would mean something different
+# to a Python reader of the rule than to the engine that runs it.
+# Explicit terminator classes + a string-start alternative parse
+# identically in java.util.regex and Python re on every input (the
+# adversarial cross-engine test holds the JVM to a Python reference). The
+# \uXXXX escapes stay literal in this raw string — both engines resolve
+# them in-pattern.
 _LINE_TERM = r"\n\r\u0085\u2028\u2029"
 SYNOPSIS_RE = rf"(?:^|[{_LINE_TERM}])SYNOPSIS: ([^{_LINE_TERM}]*)"
-_SYNOPSIS = re.compile(SYNOPSIS_RE)
-
-
-def synopsis_of(interpretation: str | None) -> str:
-    """First line-anchored SYNOPSIS claim, '' when absent — the Python
-    twin of ``regexp_extract(interpretation, SYNOPSIS_RE, 1)``."""
-    m = _SYNOPSIS.search(interpretation or "")
-    return m.group(1) if m else ""
 
 
 def parse_rtf(raw: str) -> tuple[str, str]:
@@ -211,21 +202,37 @@ def rtf_of_folder(folder_path: str) -> tuple[str | None, str | None]:
     return _parse_best_rtf(rtfs)
 
 
-def parse_session_folder(folder_path: str) -> tuple:
-    """ONE session folder -> the raw session tuple
-    ``(folder_name, start_string, line_id, contact_id, session_length,
-    participants, interpretation)``.
+_SESSION_COLS = ["folder_name", "start_string", "line_id", "contact_id",
+                 "session_length", "participants", "interpretation"]
+_SESSION_SCHEMA = ", ".join(f"{c} string" for c in _SESSION_COLS)
 
-    This is THE per-folder parse for the batch reader; the streaming
-    reader shares ``rtf_of_folder`` + ``parse_sri`` + ``synopsis_of`` (it
-    parses the offset-tracked .sri's streamed bytes instead of
-    re-reading it from disk), so batch/stream parity is structural: one
-    rtf-preference rule, one .sri field set, one stripper. Multi-.sri
-    folders (a re-delivered session dropping 0001v2.sri next to
-    0001.sri) elect the filename-MAX .sri — latest re-delivery wins,
-    deterministically, independent of os.scandir order. OSError-tolerant
-    like ``rtf_of_folder``. Folder-local I/O only; nothing here touches
-    Spark."""
+
+def session_tuple(folder_path: str, meta: dict, participants: str | None,
+                  interpretation: str | None) -> tuple:
+    """The raw session row (``_SESSION_SCHEMA``) of one folder, from its
+    parsed .sri fields and its elected rtf — the one row shape the batch
+    and streaming readers emit. Raw strings only; ``parse_sessions`` types
+    them."""
+    return (os.path.basename(folder_path),
+            meta.get("start_string"),
+            meta.get("input_line_id"),
+            meta.get("contact_id"),
+            meta.get("session_length"), participants, interpretation)
+
+
+def parse_session_folder(folder_path: str) -> tuple:
+    """ONE session folder -> the raw session tuple (``session_tuple``).
+
+    This is the batch reader's per-folder parse. The streaming reader
+    builds the same tuple from ``parse_sri`` of the offset-tracked .sri's
+    streamed bytes and ``rtf_of_folder``, and both readers run through
+    ``parse_sessions``, so batch/stream parity is structural: one
+    rtf-preference rule, one .sri field set, one stripper, one typed
+    column step. Multi-.sri folders (a re-delivered session dropping
+    0001v2.sri next to 0001.sri) elect the filename-MAX .sri — latest
+    re-delivery wins, deterministically, independent of os.scandir order.
+    OSError-tolerant like ``rtf_of_folder``. Folder-local I/O only;
+    nothing here touches Spark."""
     meta: dict = {}
     sris: list[str] = []
     rtfs: list[str] = []
@@ -243,12 +250,7 @@ def parse_session_folder(folder_path: str) -> tuple:
                 meta = parse_sri(f.read())
     except OSError:
         pass
-    parts, interp = _parse_best_rtf(rtfs)
-    return (os.path.basename(folder_path),
-            meta.get("start_string"),
-            meta.get("input_line_id"),
-            meta.get("contact_id"),
-            meta.get("session_length"), parts, interp)
+    return session_tuple(folder_path, meta, *_parse_best_rtf(rtfs))
 
 
 def _fmt_line_id(digits: str) -> str:
@@ -395,29 +397,16 @@ def write_wiretap_folders(spark: SparkSession, sf_dir: str,
     return out_dir
 
 
-_SESSION_SCHEMA = ("folder_name string, start_string string, "
-                   "line_id string, contact_id string, "
-                   "session_length string, participants string, "
-                   "interpretation string")
+def parse_sessions(df: DataFrame, parse_row, *cols: str) -> DataFrame:
+    """The session parse of both readers: ``parse_row(*values of cols)``
+    -> the raw ``session_tuple`` of each row of ``df``, in ONE Arrow
+    ``mapInPandas``, then typed by column expressions -> (folder_name,
+    time_of_call timestamp, line_id, contact_id, session_length int,
+    participants, interpretation, doc_text).
 
-
-def read_wiretap_sessions(spark: SparkSession, case_dir: str) -> DataFrame:
-    """Case directory -> one row per wiretap session:
-    (folder_name, time_of_call timestamp, line_id, contact_id,
-     session_length int, participants, interpretation, doc_text).
-
-    PARALLEL UNIT = the session FOLDER (exactly the reference's
-    process_wiretap_folder granularity, audio_processor.py:253-260): one
-    top-level directory listing fans the folder paths out across
-    executors, and each task scans + parses ITS folders' few small files
-    locally, emitting the composed session row directly — zero shuffle,
-    no per-session metadata ever crosses the wire. A recursive binaryFile
-    scan here is the wrong shape: a 20k-session case means a 20k-directory
-    recursive listing serialized on the driver (measured 18 s at sf0.1,
-    and re-paid per reader), where one scandir of the sessions root is
-    milliseconds and the per-folder I/O rides the distributed map. The
-    *.syn.rtf-over-decoy preference resolves inside the task, so no
-    groupBy is needed either.
+    Typing is never done in the Python worker and never fails the read: a
+    malformed ``start_string`` or ``session_length`` becomes NULL
+    (``try_to_timestamp``/``try_cast``) and the session's text survives.
 
     doc_text is the composed ingest document
     (audio_processor.prepare_wiretap_for_ingestion:393-455): header with
@@ -425,38 +414,21 @@ def read_wiretap_sessions(spark: SparkSession, case_dir: str) -> DataFrame:
     extraction."""
     import pandas as pd
 
-    root = os.path.join(case_dir, "sessions")
-    cols = ["folder_name", "start_string", "line_id", "contact_id",
-            "session_length", "participants", "interpretation"]
-
-    # ONE listing of the sessions root; folder names only (a 1M-session
-    # case is ~tens of MB of names — fine to fan out). A case with no
-    # sessions yet (or no sessions/ dir at all) is an empty result, not a
-    # crash.
-    folders = (sorted(e.path for e in os.scandir(root) if e.is_dir())
-               if os.path.isdir(root) else [])
-    n_slices = min(max(len(folders) // 64, 1),
-                   spark.sparkContext.defaultParallelism * 4)
-    fdf = local_df(
-        spark, [(p,) for p in folders],
-        "folder_path string").repartition(n_slices)
-
     def parse(batches):
         for pdf in batches:
             yield pd.DataFrame(
-                [parse_session_folder(fp) for fp in pdf["folder_path"]],
-                columns=cols)
+                [parse_row(*r) for r in zip(*(pdf[c] for c in cols))],
+                columns=_SESSION_COLS)
 
-    rows = fdf.mapInPandas(parse, _SESSION_SCHEMA)
-    sess = rows.select(
+    sess = df.mapInPandas(parse, _SESSION_SCHEMA).select(
         "folder_name",
         # "YYYY-MM-DD HH:MM:SS CST" -> timestamp (tz label is sliced off;
         # the reference parses naive local the same way,
         # audio_processor.py:158-166)
-        F.to_timestamp(F.substring("start_string", 1, 19),
-                       "yyyy-MM-dd HH:mm:ss").alias("time_of_call"),
+        F.try_to_timestamp(F.substring("start_string", 1, 19),
+                           F.lit("yyyy-MM-dd HH:mm:ss")).alias("time_of_call"),
         "line_id", "contact_id",
-        F.col("session_length").cast("int").alias("session_length"),
+        F.col("session_length").try_cast("int").alias("session_length"),
         "participants", "interpretation")
     doc_text = F.concat_ws(
         "\n",
@@ -473,6 +445,38 @@ def read_wiretap_sessions(spark: SparkSession, case_dir: str) -> DataFrame:
     return sess.withColumn("doc_text", doc_text)
 
 
+def read_wiretap_sessions(spark: SparkSession, case_dir: str) -> DataFrame:
+    """Case directory -> one row per wiretap session, the
+    ``parse_sessions`` columns.
+
+    PARALLEL UNIT = the session FOLDER (exactly the reference's
+    process_wiretap_folder granularity, audio_processor.py:253-260): one
+    top-level directory listing fans the folder paths out across
+    executors, and each task scans + parses ITS folders' few small files
+    locally, emitting the composed session row directly — zero shuffle,
+    no per-session metadata ever crosses the wire. A recursive binaryFile
+    scan here is the wrong shape: a 20k-session case means a 20k-directory
+    recursive listing serialized on the driver (measured 18 s at sf0.1,
+    and re-paid per reader), where one scandir of the sessions root is
+    milliseconds and the per-folder I/O rides the distributed map. The
+    *.syn.rtf-over-decoy preference resolves inside the task, so no
+    groupBy is needed either."""
+    root = os.path.join(case_dir, "sessions")
+
+    # ONE listing of the sessions root; folder names only (a 1M-session
+    # case is ~tens of MB of names — fine to fan out). A case with no
+    # sessions yet (or no sessions/ dir at all) is an empty result, not a
+    # crash.
+    folders = (sorted(e.path for e in os.scandir(root) if e.is_dir())
+               if os.path.isdir(root) else [])
+    n_slices = min(max(len(folders) // 64, 1),
+                   spark.sparkContext.defaultParallelism * 4)
+    fdf = local_df(
+        spark, [(p,) for p in folders],
+        "folder_path string").repartition(n_slices)
+    return parse_sessions(fdf, parse_session_folder, "folder_path")
+
+
 def wiretap_transcripts(spark: SparkSession, case_dir: str) -> DataFrame:
     """Wiretap sessions -> the transcripts contract (conv_id, turn_idx,
     role, text, tool, ts), so wiretap evidence flows through the exact
@@ -482,18 +486,18 @@ def wiretap_transcripts(spark: SparkSession, case_dir: str) -> DataFrame:
 
 
 def transcripts_from_sessions(s: DataFrame) -> DataFrame:
-    """Transcripts contract over ALREADY-PARSED session rows — callers
-    holding a cached/warehoused parse (plans.kg_analytics._wiretap_sessions)
+    """Transcripts contract over ALREADY-PARSED session rows: the one
+    transcript build of the batch reader, the streaming reader
+    (streaming.incremental.read_wiretap_stream) and callers holding a
+    cached/warehoused parse (plans.kg_analytics._wiretap_sessions), which
     skip re-scanning the case folders."""
     return s.select(
         F.concat(F.lit("wt-"), F.col("folder_name")).alias("conv_id"),
         F.lit(0).cast("int").alias("turn_idx"),
         F.col("line_id").alias("role"),
-        # the extractable claim line of the interpretation — SYNOPSIS_RE,
-        # the same anchored rule the streaming path applies in Python.
+        # the extractable claim line of the interpretation — SYNOPSIS_RE.
         # Coalesce: a no-rtf session has interpretation NULL, and
-        # regexp_extract(NULL) is NULL where the stream's synopsis_of(None)
-        # is '' — both paths must hand extraction the identical ''.
+        # extraction gets '' for it, like any session without a claim.
         F.coalesce(
             F.regexp_extract("interpretation", SYNOPSIS_RE, 1),
             F.lit("")).alias("text"),

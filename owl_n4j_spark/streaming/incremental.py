@@ -25,7 +25,9 @@ Every job here — XML dump and wiretap session ingest, extraction, gap
 sessions, thread stats, dedup — ends in the same sink,
 ``_drain_to_parquet`` (append, availableNow, checkpointed). The XML dump
 stream parses through the batch UFED readers' own loop
-(``sources.ufed_xml.parse_dumps``).
+(``sources.ufed_xml.parse_dumps``), and the wiretap stream through the
+batch wiretap reader's own session parse and transcript build
+(``sources.wiretap.parse_sessions`` + ``transcripts_from_sessions``).
 """
 
 from __future__ import annotations
@@ -120,6 +122,11 @@ def read_wiretap_stream(spark: SparkSession, case_dir: str,
     transcripts contract, so the stream feeds the same incremental
     extraction as transcript drops and XML dumps.
 
+    Rows are built, typed and turned into transcripts by the batch
+    reader's own ``sources.wiretap.parse_sessions`` and
+    ``transcripts_from_sessions``; only the .sri bytes come from the
+    stream instead of the disk.
+
     ``max_files_per_trigger`` bounds every micro-batch (availableNow
     included), so a large-backlog catch-up commits progress per batch.
     Scale note: the recursive listing is re-paid per trigger and the
@@ -129,12 +136,12 @@ def read_wiretap_stream(spark: SparkSession, case_dir: str,
     exactly how the reference shards its evidence mounts."""
     import os
 
-    import pandas as pd
-
     from owl_n4j_spark.sources.wiretap import (
+        parse_sessions,
         parse_sri,
         rtf_of_folder,
-        synopsis_of,
+        session_tuple,
+        transcripts_from_sessions,
     )
 
     # repartition BEFORE the parse: .sri markers are ~100-byte rows, so the
@@ -153,39 +160,22 @@ def read_wiretap_stream(spark: SparkSession, case_dir: str,
              .select("path", "content")
              .repartition(spark.sparkContext.defaultParallelism * 2))
 
-    def parse(batches):
-        for pdf in batches:
-            out = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                # Metadata comes from the offset-tracked .sri's STREAMED
-                # bytes — the exactly-once unit IS this file, so its
-                # fields are deterministic even if the folder gains a
-                # re-delivered sibling .sri later (the batch reader
-                # elects filename-max across them). The rtf election +
-                # stripper + SYNOPSIS rule are the same sources.wiretap
-                # functions the batch parse runs; re-listing the folder
-                # for rtfs is safe because the producer writes the .sri
-                # marker LAST (write_wiretap_folders' write-order
-                # contract), and rtf_of_folder tolerates a folder that
-                # was archived between listing and processing (a
-                # no-interpretation session, never a poison-pill task).
-                meta = parse_sri(bytes(content).decode("utf-8",
-                                                       errors="ignore"))
-                folder = os.path.dirname(path.replace("file:", ""))
-                _parts, interp = rtf_of_folder(folder)
-                out.append((f"wt-{os.path.basename(folder)}", 0,
-                            meta.get("input_line_id"),
-                            synopsis_of(interp), "Wiretap",
-                            (meta.get("start_string") or "")[:19] or None))
-            df = pd.DataFrame(out, columns=["conv_id", "turn_idx", "role",
-                                            "text", "tool", "ts"])
-            df["ts"] = pd.to_datetime(df["ts"],
-                                      format="%Y-%m-%d %H:%M:%S",
-                                      errors="coerce")
-            df["turn_idx"] = df["turn_idx"].astype("int32")
-            yield df
+    def parse(path, content):
+        # Metadata comes from the offset-tracked .sri's STREAMED bytes —
+        # the exactly-once unit IS this file, so its fields are
+        # deterministic even if the folder gains a re-delivered sibling
+        # .sri later (the batch reader elects filename-max across them).
+        # Re-listing the folder for rtfs is safe because the producer
+        # writes the .sri marker LAST (write_wiretap_folders' write-order
+        # contract), and rtf_of_folder tolerates a folder that was
+        # archived between listing and processing (a no-interpretation
+        # session, never a poison-pill task).
+        folder = os.path.dirname(path.replace("file:", ""))
+        meta = parse_sri(bytes(content).decode("utf-8", errors="ignore"))
+        return session_tuple(folder, meta, *rtf_of_folder(folder))
 
-    return files.mapInPandas(parse, TRANSCRIPT_SCHEMA)
+    return transcripts_from_sessions(
+        parse_sessions(files, parse, "path", "content"))
 
 
 def run_incremental_wiretap_ingest(

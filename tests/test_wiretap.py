@@ -241,15 +241,21 @@ def test_wiretap_manifest_statuses_and_loud_report(spark, capsys):
 
 
 def test_synopsis_rule_cross_engine_adversarial(spark):
-    """SYNOPSIS_RE is evaluated by TWO regex engines — Java (batch
-    regexp_extract) and Python re (streaming synopsis_of). One generated
-    adversarial corpus through both in one job: mid-line mentions, CRLF,
-    leading spaces, multiple claim lines, unicode, empty/None — the
-    engines must agree byte-for-byte on every case or the two ingestion
-    paths silently extract different claims."""
+    """SYNOPSIS_RE is written to mean the same in Java and Python re; the
+    engine evaluates it with Java (regexp_extract) and this test holds
+    that to a Python re reference. One generated adversarial corpus
+    through both: mid-line mentions, CRLF, leading spaces, multiple claim
+    lines, unicode, empty/None — the engines must agree byte-for-byte on
+    every case, or the rule extracts a claim its reader would not
+    expect."""
     import random
+    import re
 
-    from owl_n4j_spark.sources.wiretap import SYNOPSIS_RE, synopsis_of
+    from owl_n4j_spark.sources.wiretap import SYNOPSIS_RE
+
+    def synopsis_of(s):
+        m = re.compile(SYNOPSIS_RE).search(s or "")
+        return m.group(1) if m else ""
 
     rng = random.Random(411)
     frags = ["SYNOPSIS: ", "SYNOPSIS:", "synopsis: ", " SYNOPSIS: ",
@@ -369,3 +375,38 @@ def test_rtf_uc_scoping_and_rich_fixture_parity():
         assert rich == plain
     # rich fixtures exist at every sf (eid % 7): the oracle parity suite
     # (scripts_dev/check_oracles.py q_wiretap_ingest) therefore covers them
+
+
+def test_malformed_sri_fields_never_fail_the_read(spark, tmp_path):
+    """A .sri whose start_string and session_length do not parse still
+    yields its session on every reader: the malformed fields are NULL,
+    never a failed job, and the text and role are the same as a
+    well-formed session would get."""
+    folder = tmp_path / "sessions" / "00000003"
+    folder.mkdir(parents=True)
+    (folder / "00000003.syn.rtf").write_text(
+        "{\\rtf1\\ansi PARTICIPANTS: A AND B\\par "
+        "SYNOPSIS: A called B yesterday.\\par}")
+    (folder / "00000003.sri").write_text(
+        "version=2\ninput_line_id=210-555-0003\n"
+        "start_string=garbage\nsession_length=sixty\n")
+    from owl_n4j_spark.sources.wiretap import read_wiretap_sessions
+    from owl_n4j_spark.streaming.incremental import read_wiretap_stream
+
+    sess = read_wiretap_sessions(spark, str(tmp_path)).collect()
+    assert len(sess) == 1
+    assert sess[0].time_of_call is None and sess[0].session_length is None
+    assert "SYNOPSIS: A called B yesterday." in sess[0].doc_text
+
+    batch = wiretap_transcripts(spark, str(tmp_path)).collect()
+    q = (read_wiretap_stream(spark, str(tmp_path))
+         .writeStream.format("memory").queryName("wt_malformed")
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    stream = spark.sql("SELECT * FROM wt_malformed").collect()
+    for rows in (batch, stream):
+        assert len(rows) == 1
+        r = rows[0]
+        assert r.ts is None
+        assert (r.conv_id, r.role, r.text) == (
+            "wt-00000003", "210-555-0003", "A called B yesterday.")
